@@ -153,7 +153,7 @@ object MigrationPipeline {
     * `when(cond, struct.withField(..)).otherwise(struct)` chain therefore
     * re-evaluates the full previous struct for every reference, and
     * chained whole-struct steps compound multiplicatively (measured:
-    * ~140 ms/row at 4 chained levels, tools/EtlProfile). Every update
+    * ~140 ms/row at 4 chained levels). Every update
     * here is expressed FIELD-level instead — `withField` null-propagates
     * the container and each field value is computed once from the
     * original input — which is linear and ~100× faster. */
@@ -177,10 +177,8 @@ object MigrationPipeline {
           .otherwise(arr)))
   }
 
-  /** All nested transforms on the matched (customer × CSV-row) frame.
-    * `withN5` exists for phase profiling (tools/EtlProfile) only. */
-  def transformMatched(joined: DataFrame, todayIso: String,
-      withN5: Boolean = true): DataFrame = {
+  /** All nested transforms on the matched (customer × CSV-row) frame. */
+  def transformMatched(joined: DataFrame, todayIso: String): DataFrame = {
     val custAttrs = col("custom-attributes").getField("custom-attribute")
 
     def attrExistsAnywhere(name: String): Column = {
@@ -248,8 +246,7 @@ object MigrationPipeline {
 
     // N5 — schema-agnostic descendant TEXT replace over the user subtree
     // (:223-225). Attribute fields (prefix "_") are not text nodes; _VALUE is.
-    if (!withN5) step2.withColumn("graft_new_id", newId)
-    else NestedOps.replaceNestedText(
+    NestedOps.replaceNestedText(
       step2.withColumn("graft_new_id", newId), "user", "graft_old_id", "graft_new_id",
       skipStructField = f => f.startsWith("_") && f != "_VALUE")
   }
@@ -323,6 +320,8 @@ object MigrationPipeline {
       col("reason") =!= "Not found in source XML").count()
     val distinct = prepared.agg(
       countDistinct(col("current_customer_id").cast("string"))).head().getLong(0)
+    // the last action that reads the cached mapping rows
+    prepared.unpersist()
 
     val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val xmlPath =

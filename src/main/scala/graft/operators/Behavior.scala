@@ -476,8 +476,8 @@ object Behavior {
     * in ⌈log₂(d−1)⌉+1 keyed joins instead of d level-synchronous ones
     * (the round count is what dominates an iterative job's cost — each
     * round is a full join + checkpoint + probe cycle; guide §1.2).
-    * Every round localCheckpoints (the [[graft.operators.Iterate]]
-    * fixed-iteration discipline; plans stay O(1) per round). Paths
+    * Every round is checkpointed by [[Iterate.fixpoint]] (plans stay
+    * O(1) per round, superseded rounds are freed). Paths
     * ride as id ARRAYS (text joined back exactly once at the end) —
     * the exchanged volume is ids × depth, never text × depth. The loop
     * exits as soon as no node can still make progress (the count probe
@@ -528,7 +528,7 @@ object Behavior {
     // reaches a root), `__path` = the contiguous ancestor chain from
     // __jump's child down to the node itself, `__dead` = the chain hit
     // a dangling parent id (no such node — unreachable forever)
-    var state = Iterate.checkpoint(m.select(col("__id"),
+    val init = Iterate.checkpoint(m.select(col("__id"),
       col("__p").as("__jump"), array(col("__id")).as("__path"),
       lit(false).as("__dead")))
     // every node within maxDepth levels of a root settles within
@@ -537,26 +537,26 @@ object Behavior {
     // length below, exactly like nodes level-BFS never reached
     val roundCap = if (maxDepth == 1) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(maxDepth - 2L) + 1
-    var round = 0
-    var nActive = state.filter(!col("__dead") && col("__jump").isNotNull)
-      .count()
-    while (round < roundCap && nActive > 0) {
-      round += 1
-      val settled = state.filter(col("__dead") || col("__jump").isNull)
-      val contracted = state.filter(!col("__dead") && col("__jump").isNotNull)
-        .join(state.select(col("__id").as("__jump"),
-            col("__jump").as("__jump2"), col("__path").as("__path2")),
-          Seq("__jump"), "left")
-        .select(col("__id"),
-          when(col("__path2").isNull, col("__jump"))
-            .otherwise(col("__jump2")).as("__jump"),
-          coalesce(concat(col("__path2"), col("__path")), col("__path"))
-            .as("__path"),
-          col("__path2").isNull.as("__dead"))
-      state = Iterate.checkpoint(settled.unionAll(contracted))
-      nActive = state.filter(!col("__dead") && col("__jump").isNotNull)
-        .count()
-    }
+    // one driver scalar per round: no node still has a path to splice
+    val settled = (st: DataFrame) =>
+      st.filter(!col("__dead") && col("__jump").isNotNull).count() == 0L
+    val state =
+      if (settled(init)) init
+      else Iterate.fixpoint(init, roundCap, Some(settled)) { (state, _) =>
+        val done = state.filter(col("__dead") || col("__jump").isNull)
+        val contracted = state
+          .filter(!col("__dead") && col("__jump").isNotNull)
+          .join(state.select(col("__id").as("__jump"),
+              col("__jump").as("__jump2"), col("__path").as("__path2")),
+            Seq("__jump"), "left")
+          .select(col("__id"),
+            when(col("__path2").isNull, col("__jump"))
+              .otherwise(col("__jump2")).as("__jump"),
+            coalesce(concat(col("__path2"), col("__path")), col("__path"))
+              .as("__path"),
+            col("__path2").isNull.as("__dead"))
+        done.unionAll(contracted)
+      }.frame
     val placedRows = state.filter(!col("__dead") && col("__jump").isNull &&
       size(col("__path")) <= maxDepth)
     val placed = placedRows.select(col("__id"))

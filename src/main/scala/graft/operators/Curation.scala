@@ -58,8 +58,8 @@ object Curation {
     // for exactly the same reason; localCheckpoint is the in-session
     // equivalent (and truncates the lineage the CC iterations would
     // otherwise re-plan every round).
-    val exact = quality.join(exactKeepers, Seq(idCol), "left_semi")
-      .localCheckpoint()
+    val exact = Iterate.checkpoint(
+      quality.join(exactKeepers, Seq(idCol), "left_semi"))
 
     // 3. verified near-dup dedup: drop every non-keeper cluster member
     val clusters = Dedup.verifiedClusters(exact, textCol, idCol)

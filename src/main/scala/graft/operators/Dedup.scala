@@ -347,7 +347,7 @@ object Dedup {
     * semi-join work, paid once. */
   def jaccardPairsCapped(shing: DataFrame, maxDocs: Int,
       thresholdTenths: Int): DataFrame =
-    jaccardPairs(capShingleFrequency(shing, maxDocs).localCheckpoint(true),
+    jaccardPairs(Iterate.checkpoint(capShingleFrequency(shing, maxDocs)),
       thresholdTenths)
 
   /** MinHash signature: k independent hash functions h_i(s) = md5(i|s),
@@ -875,14 +875,13 @@ object Dedup {
         "Long.MinValue — its negation overflows the struct-min " +
         "ordering; clamp the score upstream")).cast("long"))
       .otherwise(col("score_micros"))
-    val scored = member.join(
+    val scored = Iterate.checkpoint(member.join(
         scores.select(col(idCol).as("doc_id"),
           col(scoreMicrosCol).cast("long").as("score_micros")),
         Seq("doc_id"), "left")
       .withColumn("__u",
         when(col("score_micros").isNull, 1).otherwise(0))
-      .withColumn("__rsc", coalesce(-guarded, lit(0L)))
-      .localCheckpoint()
+      .withColumn("__rsc", coalesce(-guarded, lit(0L))))
     val best = scored.groupBy(col("cluster"))
       .agg(count(lit(1)).as("cluster_size"),
         min(struct(col("__u"), col("__rsc").as("__n"),
@@ -968,15 +967,14 @@ object Dedup {
       maxIter: Int = 20): DataFrame = {
     val comp = verifiedClusters(docs, textCol, idCol, numHashes,
       rowsPerBand, thresholdTenths, maxIter)
-    val mem = docs.select(col(idCol),
+    val mem = Iterate.checkpoint(docs.select(col(idCol),
         coalesce(col(sourceCol).cast("string"), lit("<null>")).as("__src"))
       .join(comp.select(col("node").as(idCol), col("component")),
         Seq(idCol), "left")
       .select(coalesce(col("component"), col(idCol)).as("__cl"),
         col("__src"))
       .groupBy(col("__cl"), col("__src"))
-      .agg(count(lit(1)).as("__nd"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("__nd")))
     mem.select(col("__cl"), col("__src").as("src_a"), col("__nd").as("__na"))
       .join(mem.select(col("__cl"), col("__src").as("src_b"),
         col("__nd").as("__nb")), Seq("__cl"))
@@ -1292,9 +1290,8 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       k: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val benchShing = docShingles(bench, textCol, idCol, k)
-      .select(col("sid").as("__bid"), col("sh"))
-      .localCheckpoint()
+    val benchShing = Iterate.checkpoint(docShingles(bench, textCol, idCol, k)
+      .select(col("sid").as("__bid"), col("sh")))
     val itemTotals = benchShing.groupBy(col("__bid"))
       .agg(count(lit(1)).as("n_item_shingles"))
     val trainShing = docShingles(train, textCol, idCol, k)
@@ -1407,11 +1404,12 @@ object Dedup {
     ids.write.mode("append").parquet(s"$dir/tombstones")
     val docs = spark.read.parquet(s"$dir/docs")
     // shingles to remove = referenced by purged docs AND by no survivor
-    val removed = docs.join(broadcast(ids), Seq("sid"), "left_semi")
+    // settled BEFORE the docs rewrite below
+    val removed = Iterate.checkpoint(
+      docs.join(broadcast(ids), Seq("sid"), "left_semi")
       .select(col("sh")).distinct()
       .join(docs.join(broadcast(ids), Seq("sid"), "left_anti")
-        .select(col("sh")).distinct(), Seq("sh"), "left_anti")
-      .localCheckpoint(true) // settled BEFORE the docs rewrite below
+        .select(col("sh")).distinct(), Seq("sh"), "left_anti"))
     // bounded collect: at most `slices` distinct values
     val affected = spark.read.parquet(s"$dir/shingles")
       .join(broadcast(removed), Seq("sh"), "left_semi")
@@ -1427,9 +1425,9 @@ object Dedup {
     if (affected.nonEmpty) {
       val rebuiltSrc = spark.read.parquet(s"$dir/shingles")
         .filter(col("slice").isin(affected.map(Integer.valueOf): _*))
-      val keptRows = spark.read.parquet(s"$dir/blooms")
-        .filter(!col("slice").isin(affected.map(Integer.valueOf): _*))
-        .localCheckpoint(true) // read the OLD rows before the swap
+      // read the OLD rows before the swap
+      val keptRows = Iterate.checkpoint(spark.read.parquet(s"$dir/blooms")
+        .filter(!col("slice").isin(affected.map(Integer.valueOf): _*)))
       val rebuilt = bloomRowsFor(rebuiltSrc, expectedItems, numBits)
       graft.sources.Sinks.rewriteParquet(spark, s"$dir/blooms",
         _ => keptRows.unionByName(rebuilt))
@@ -1489,9 +1487,8 @@ object Dedup {
     // round 0 fused into initialization: every node starts at
     // min(self, neighbors) — one aggregation instead of the first
     // join+aggregate propagation round
-    var checkpointed = Iterate.checkpoint(edges.groupBy(col("src").as("node"))
+    val init = Iterate.checkpoint(edges.groupBy(col("src").as("node"))
       .agg(least(col("src"), min(col("dst"))).as("label")))
-    var labels = checkpointed
     // one propagation round: min of (own label, neighbors' labels, the
     // own label's CURRENT label). The third term is pointer
     // shortcutting — label values are node ids, so L(L(v)) is one
@@ -1510,17 +1507,25 @@ object Dedup {
     // dedup clusters usually are — the extra self-join would be pure
     // tax there); the shortcut joins in from round 2, when a still-
     // unconverged graph has demonstrated depth.
-    def propagate(withShortcut: Boolean): DataFrame = {
+    //
+    // A graph that converges on exactly the maxIter-th round still
+    // reports improved rows in that round even though the labels are
+    // already final — one extra confirming round (a no-op when
+    // converged) distinguishes that from a genuinely unconverged graph
+    // before we fail, hence maxIter + 1 rounds.
+    val settled = (next: DataFrame) => next.filter(col("improved")).count() == 0L
+    val cc = Iterate.fixpoint(init, maxIter + 1, Some(settled)) { (prev, round) =>
+      val labels = prev.select(col("node"), col("label"))
       val viaNbr = edges
         .join(labels.select(col("node").as("src"), col("label")), Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(min(col("label")).as("nbr_label"))
-      if (!withShortcut)
-        Iterate.checkpoint(labels.join(viaNbr, Seq("node"), "left")
+      if (round == 1 && maxIter > 0)
+        labels.join(viaNbr, Seq("node"), "left")
           .select(col("node"),
             least(col("label"), coalesce(col("nbr_label"), col("label")))
               .as("label"),
-            (col("nbr_label") < col("label")).as("improved")))
+            (col("nbr_label") < col("label")).as("improved"))
       else {
         // L(v) is always a node id of this graph (the init folds min
         // over self + neighbors; updates fold other nodes' labels), so
@@ -1529,45 +1534,23 @@ object Dedup {
           .join(labels.select(col("node").as("__l"),
             col("label").as("ptr_label")), Seq("__l"))
           .select(col("node"), col("ptr_label"))
-        Iterate.checkpoint(labels.join(viaNbr, Seq("node"), "left")
+        labels.join(viaNbr, Seq("node"), "left")
           .join(viaPtr, Seq("node"))
           .select(col("node"),
             least(col("label"), coalesce(col("nbr_label"), col("label")),
               col("ptr_label")).as("label"),
             (least(coalesce(col("nbr_label"), col("label")),
-              col("ptr_label")) < col("label")).as("improved")))
+              col("ptr_label")) < col("label")).as("improved"))
       }
     }
-    def advance(next: DataFrame): Long = {
-      val changed = next.filter(col("improved")).count()
-      // next is materialized — the previous round's blocks are dead; free
-      // them now instead of waiting for driver GC (they otherwise pile up
-      // across rounds and runs and pressure the block store)
-      checkpointed.unpersist()
-      checkpointed = next
-      labels = next.select(col("node"), col("label"))
-      changed
-    }
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      changed = advance(propagate(withShortcut = i > 0))
-      i += 1
-    }
-    // a graph that converges on exactly the maxIter-th round exits with
-    // changed > 0 even though the labels are already final — one extra
-    // confirming round (a no-op when converged) distinguishes that from a
-    // genuinely unconverged graph before we fail
-    if (changed > 0) changed = advance(propagate(withShortcut = true))
-    edges.unpersist()
     // fail fast rather than return partially-propagated labels: a graph
     // whose diameter exceeds maxIter would otherwise silently yield wrong
     // components (near-dup clusters are shallow, so hitting this means the
     // input is not the expected cluster shape — raise maxIter explicitly)
-    require(changed == 0,
+    require(cc.converged,
       s"connectedComponents did not converge in $maxIter rounds " +
-        s"($changed labels still improving) — raise maxIter")
-    labels.withColumnRenamed("label", "component")
+        "(labels still improving) — raise maxIter")
+    cc.frame.select(col("node"), col("label").as("component"))
   }
 
   /** SimHash near-dup pairs at Hamming distance <= `maxDist`, found by

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * partial — a node's in-edges combine within each task before the
   * shuffle), and one keys-sized left join back to the node set. Nothing
   * is ever collected to the driver except the node COUNT and (under
-  * `tol`) one movement scalar per round; rounds truncate lineage via
+  * `tol`) one movement scalar per round; rounds run through
+  * [[Iterate.fixpoint]], which truncates lineage via
   * [[Iterate.checkpoint]] — executor-local blocks on local[32], reliable
   * checkpoint files when the deployment has set a checkpoint dir (the
   * 100 TB posture: an executor loss mid-iteration then recovers instead
@@ -171,12 +172,17 @@ object Graph {
     // constant (1-d)·1e6 — exact at 150000 for the default damping.
     val restartM = (1.0 - damping) * 1e6
 
-    var ranks = nodes.select(col("node"), col("__seed"), col("__out"),
+    val init = nodes.select(col("node"), col("__seed"), col("__out"),
       when(col("__seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_m"))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      round += 1
+    // exact-integer movement scalar over the just-checkpointed frame
+    // (new rank + carried previous rank — no join). Normalized by s so
+    // tol keeps meaning "total movement in OUTPUT-rank units (which sum
+    // to ~1)" under per-node micros.
+    val settled = tol.map { t => (r: DataFrame) =>
+      r.agg(coalesce(sum(abs(col("rank_m") - col("__prev"))), lit(0L)))
+        .first().getLong(0).toDouble / 1e6 / s <= t
+    }
+    val ranks = Iterate.fixpoint(init, iters, settled) { (ranks, _) =>
       // share per out-edge: long/long division is IEEE double in both
       // engines; floor(x + 0.5) quantizes to micros deterministically.
       // Weighted: rank·w/wsum as CAST-to-double FIRST then two IEEE ops
@@ -209,21 +215,11 @@ object Graph {
             coalesce(col("__s"), lit(0L)).cast("double") + lit(0.5)))
           .as("rank_m")) ++
         (if (tol.isDefined) Seq(col("rank_m").as("__prev")) else Nil)
-      ranks = Iterate.checkpoint(ranks
+      ranks
         .join(contribs, col("node") === col("dst"), "left")
         .crossJoin(broadcast(dangling))
-        .select(outCols: _*))
-      tol.foreach { t =>
-        // exact-integer movement scalar over the just-checkpointed
-        // frame (new rank + carried previous rank — no join).
-        // Normalized by s so tol keeps meaning "total movement in
-        // OUTPUT-rank units (which sum to ~1)" under per-node micros.
-        val movedM = ranks
-          .agg(coalesce(sum(abs(col("rank_m") - col("__prev"))), lit(0L)))
-          .first().getLong(0)
-        if (movedM.toDouble / 1e6 / s <= t) converged = true
-      }
-    }
+        .select(outCols: _*)
+    }.frame
     ranks.select(col("node"),
       (col("rank_m").cast("double") / lit(1e6) / s).as("rank"))
   }
@@ -307,13 +303,22 @@ object Graph {
     val n = nodes.count() // one driver scalar, the tol normalizer
     require(n > 0, "hits: empty edge list")
 
-    var scores = nodes
+    val init = nodes
       .withColumn("auth_m", lit(1000000L))
       .withColumn("hub_m", lit(1000000L))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      round += 1
+    // the pageRank tol discipline: one exact-integer movement scalar per
+    // round — Σ(|Δauth_m| + |Δhub_m|) over the just-checkpointed frame
+    // (previous scores carried along — no join), normalized by the NODE
+    // count so tol means "average per-node movement in score units" on
+    // any graph size, the same per-output-unit contract as pageRank's
+    // division by its seed count; output equals the fixed round count
+    // actually executed (GraphSpec)
+    val settled = tol.map { t => (sc: DataFrame) =>
+      sc.agg(coalesce(sum(abs(col("auth_m") - col("__pa")) +
+          abs(col("hub_m") - col("__ph"))), lit(0L)))
+        .first().getLong(0).toDouble / 1e6 / n <= t
+    }
+    val scores = Iterate.fixpoint(init, iters, settled) { (scores, _) =>
       // the previous score frame is the per-round spine (same key set
       // as `nodes`, already materialized): authorities rescale onto it
       // carrying the previous scores along, hubs rescale onto THAT —
@@ -345,28 +350,13 @@ object Graph {
         .groupBy(col("src")).agg(sum("auth_m").as("__raw")))
       val hmx = hRaw.agg(max(col("__raw")).as("__mx"))
       val keepPrev = if (tol.isDefined) Seq(col("__pa"), col("__ph")) else Nil
-      scores = Iterate.checkpoint(auth
+      auth
         .join(hRaw, col("node") === col("src"), "left")
         .crossJoin(broadcast(hmx))
         .select(Seq(col("node"), col("auth_m"),
           floor(coalesce(col("__raw"), lit(0L)).cast("double") * lit(1e6) /
-            col("__mx") + lit(0.5)).as("hub_m")) ++ keepPrev: _*))
-      tol.foreach { t =>
-        // the pageRank tol discipline: one exact-integer movement
-        // scalar per round — Σ(|Δauth_m| + |Δhub_m|) over the
-        // just-checkpointed frame (previous scores carried along — no
-        // join), normalized by the NODE count so tol means "average
-        // per-node movement in score units" on any graph size, the
-        // same per-output-unit contract as pageRank's division by its
-        // seed count; output equals the fixed round count actually
-        // executed (GraphSpec)
-        val movedM = scores
-          .agg(coalesce(sum(abs(col("auth_m") - col("__pa")) +
-            abs(col("hub_m") - col("__ph"))), lit(0L)))
-          .first().getLong(0)
-        if (movedM.toDouble / 1e6 / n <= t) converged = true
-      }
-    }
+            col("__mx") + lit(0.5)).as("hub_m")) ++ keepPrev: _*)
+    }.frame
     scores.select(col("node"),
       (col("auth_m").cast("double") / lit(1e6)).as("auth"),
       (col("hub_m").cast("double") / lit(1e6)).as("hub"))
@@ -508,31 +498,31 @@ object Graph {
     // produced — deg_t(v) counts v's neighbors inside the round-(t−1)
     // survivor set, so output (and the non-converged superset case) is
     // bit-identical.
-    var deg = Iterate.checkpoint(
+    val deg0 = Iterate.checkpoint(
       nbr.groupBy("node").agg(count(lit(1)).as("degree")))
-    var nAlive = deg.count() // one driver scalar per round
-    var result = deg.filter(col("degree") >= lit(k.toLong))
-    var round = 0
-    var converged = nAlive == 0
-    while (round < iters && !converged) {
-      round += 1
-      val removed = deg.filter(col("degree") < lit(k.toLong))
-      val surviving = deg.filter(col("degree") >= lit(k.toLong))
-      result = surviving
-      val nRemoved = removed.count()
-      if (nRemoved == 0L || nRemoved == nAlive) converged = true
-      nAlive -= nRemoved
-      if (!converged && round < iters) {
+    // one driver scalar pair per round: the peel is done once a round
+    // removes nothing (stable core) or everything (empty core)
+    def settled(deg: DataFrame): Boolean = {
+      val r = deg.agg(count(when(col("degree") < lit(k.toLong), 1)),
+        count(lit(1))).first()
+      r.getLong(0) == 0L || r.getLong(0) == r.getLong(1)
+    }
+    // the first removal round runs on the initial degrees; each
+    // fixpoint round peels the previous round's removals, so `iters`
+    // removal rounds are iters - 1 peels
+    val peeled =
+      if (settled(deg0)) Iterate.Fixpoint(deg0, converged = true)
+      else Iterate.fixpoint(deg0, iters - 1, Some(settled _)) { (deg, _) =>
+        val removed = deg.filter(col("degree") < lit(k.toLong))
         val drops = nbr
           .join(removed.select(col("node").as("other")), Seq("other"))
           .groupBy("node").agg(count(lit(1)).as("__drop"))
-        deg = Iterate.checkpoint(surviving
+        deg.filter(col("degree") >= lit(k.toLong))
           .join(drops, Seq("node"), "left")
           .select(col("node"),
-            (col("degree") - coalesce(col("__drop"), lit(0L))).as("degree")))
+            (col("degree") - coalesce(col("__drop"), lit(0L))).as("degree"))
       }
-    }
-    (result, converged)
+    (peeled.frame.filter(col("degree") >= lit(k.toLong)), peeled.converged)
   }
 
   /** Label-propagation community detection over directed `edges(src,
@@ -568,11 +558,12 @@ object Graph {
     val e = Iterate.checkpoint(edges.select(col("src"), col("dst")))
     val nodes = Iterate.checkpoint(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    var labels = nodes.withColumn("label", col("node"))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      round += 1
+    val settled = tolChanged.map { t => (next: DataFrame) =>
+      next.filter(col("__chg")).count() <= t
+    }
+    Iterate.fixpoint(nodes.withColumn("label", col("node")), iters,
+        settled) { (prev, _) =>
+      val labels = prev.select(col("node"), col("label"))
       val counts = e.join(labels, col("src") === col("node"))
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("__cnt"))
@@ -584,18 +575,13 @@ object Graph {
       val winner = counts.groupBy(col("dst"))
         .agg(min_by(col("label"),
           struct((-col("__cnt")).as("nc"), col("label"))).as("__new"))
-      val next = Iterate.checkpoint(labels
+      labels
         .join(winner, col("node") === col("dst"), "left")
         .select(col("node"),
           coalesce(col("__new"), col("label")).as("label"),
           (col("__new").isNotNull && col("__new") =!= col("label"))
-            .as("__chg")))
-      tolChanged.foreach { t =>
-        if (next.filter(col("__chg")).count() <= t) converged = true
-      }
-      labels = next.select(col("node"), col("label"))
-    }
-    labels
+            .as("__chg"))
+    }.frame.select(col("node"), col("label"))
   }
 
   /** Co-occurrence edge construction: items sharing a container become an
@@ -688,31 +674,27 @@ object Graph {
     val e = Iterate.checkpoint(edges
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .select(col("src"), col("dst")).distinct())
-    var dist = Iterate.checkpoint(seeds
+    // `__new` marks the frontier: nodes first reached in the round that
+    // produced the frame (the seeds in the initial one)
+    val dist = Iterate.checkpoint(seeds
       .filter(col("node").isNotNull)
       .select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    var frontier = dist
-    var round = 0
-    var frontierSize = frontier.count() // one driver scalar per round
-    require(frontierSize > 0, "bfsDepth: empty seed set")
-    while (round < iters && frontierSize > 0) {
-      round += 1
-      val relaxed = e.join(frontier, col("src") === col("node"))
+      .withColumn("dist", lit(0L)).withColumn("__new", lit(true)))
+    require(dist.count() > 0, "bfsDepth: empty seed set")
+    // one driver scalar per round: an empty frontier is convergence
+    val settled = (d: DataFrame) => d.filter(col("__new")).count() == 0L
+    Iterate.fixpoint(dist, iters, Some(settled)) { (dist, round) =>
+      val relaxed = e.join(dist.filter(col("__new")), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-      val merged = Iterate.checkpoint(dist.unionAll(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
       // the new frontier: nodes whose min dist IS this round's level —
       // exactly the first-reached set (settled nodes keep smaller
-      // dists). A filter over the just-checkpointed merged frame needs
-      // no checkpoint of its own (guide §1.2: one materialization job
-      // less per round — the filter re-reads local blocks, never
-      // lineage)
-      frontier = merged.filter(col("dist") === lit(round.toLong))
-      frontierSize = frontier.count()
-      dist = merged
-    }
-    dist
+      // dists). A flag on the merged frame needs no checkpoint of its
+      // own (guide §1.2: one materialization job less per round — the
+      // next round's filter re-reads local blocks, never lineage)
+      dist.select(col("node"), col("dist")).unionAll(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+        .withColumn("__new", col("dist") === lit(round.toLong))
+    }.frame.select(col("node"), col("dist"))
   }
 
   /** Weighted multi-source shortest paths over directed `edges(src,
@@ -745,17 +727,19 @@ object Graph {
     require(minW >= 0,
       s"shortestPaths: negative edge weight $minW — non-negative " +
         "weights only (no replayable fixed point under negative cycles)")
-    var dist = Iterate.checkpoint(seeds
+    // `__pd` is the distance before the round that produced the frame
+    // (null for a node that round first reached — every seed initially)
+    val dist = Iterate.checkpoint(seeds
       .filter(col("node").isNotNull)
       .select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    var changed = dist
-    var nChanged = changed.count() // one driver scalar per round
-    require(nChanged > 0, "shortestPaths: empty seed set")
-    var round = 0
-    while (round < iters && nChanged > 0) {
-      round += 1
-      val relaxed = e.join(changed, col("src") === col("node"))
+      .withColumn("dist", lit(0L)).withColumn("__pd", lit(null).cast("long")))
+    require(dist.count() > 0, "shortestPaths: empty seed set")
+    def changed(d: DataFrame): DataFrame =
+      d.filter(col("__pd").isNull || col("dist") < col("__pd"))
+    // one driver scalar per round: a no-change round is convergence
+    val settled = (d: DataFrame) => changed(d).count() == 0L
+    Iterate.fixpoint(dist, iters, Some(settled)) { (dist, _) =>
+      val relaxed = e.join(changed(dist), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
           lit(null).cast("long").as("__pd"))
       // the previous distance rides the settled rows INTO the min-merge
@@ -764,18 +748,11 @@ object Graph {
       // changed set is then a filter over the just-checkpointed merge
       // instead of a second nodes × nodes join + checkpoint per round
       // (guide §2.4)
-      val merged = Iterate.checkpoint(
-        dist.select(col("node"), col("dist"), col("dist").as("__pd"))
-          .unionAll(relaxed)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist"),
-            min(col("__pd")).as("__pd")))
-      changed = merged
-        .filter(col("__pd").isNull || col("dist") < col("__pd"))
-        .select(col("node"), col("dist"))
-      nChanged = changed.count()
-      dist = merged.select(col("node"), col("dist"))
-    }
-    dist
+      dist.select(col("node"), col("dist"), col("dist").as("__pd"))
+        .unionAll(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"),
+          min(col("__pd")).as("__pd"))
+    }.frame.select(col("node"), col("dist"))
   }
 
   /** Adamic-Adar link prediction over undirected `edges(src, dst)` —

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   *     task — independent of corpus size. This is the shape that survives
   *     100 TB; an `Aggregator` over whole arrays would be interpreted and
   *     shuffle full vectors.
-  *   - each round ends in an eager `localCheckpoint` of the k-row centroid
-  *     frame: plans stay O(1) per iteration instead of growing a lineage
-  *     chain, and downstream reuse (assign + probe + search share the
-  *     trained table) does not re-run training.
+  *   - each round ends in an eager checkpoint of the k-row centroid
+  *     frame ([[Iterate.fixpoint]]): plans stay O(1) per iteration
+  *     instead of growing a lineage chain, and downstream reuse
+  *     (assign + probe + search share the trained table) does not re-run
+  *     training.
   *
   * Deterministic, engine-replayable contract (the DuckDB oracle replays
   * the exact same fixed iterations — see SimilarityQueries.duckKmeans):
@@ -42,15 +43,14 @@ object Kmeans {
 
   /** Train `k` centroids with `iters` Lloyd iterations from the default
     * init (the first `k` vectors by id).
-    * Returns `(centroid_id: long, cv: array<float>)`, localCheckpointed —
+    * Returns `(centroid_id: long, cv: array<float>)`, checkpointed —
     * safe to reuse across assign/search stages without re-running. */
   def train(emb: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 2, s"need k >= 2 centroids, got $k")
-    val init = emb.filter(col(idCol) < k)
+    val init = Iterate.checkpoint(emb.filter(col(idCol) < k)
       .select(col(idCol).cast("long").as("centroid_id"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .localCheckpoint(true)
+        col(vecCol).cast("array<float>").as("cv")))
     // the seed predicate assumes ids are dense from 0 — with sparse ids it
     // silently yields < k (possibly 0) centroids and every later stage
     // would "work" on a crippled codebook. The count is on the k-row
@@ -71,8 +71,7 @@ object Kmeans {
   def trainFrom(emb: DataFrame, init: DataFrame, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(iters >= 1, s"need >= 1 Lloyd iteration, got $iters")
-    var cents = init
-    for (_ <- 1 to iters) {
+    Iterate.fixpoint(init, iters) { (cents, _) =>
       val assigned = Similarity.assignToCentroids(emb, cents, idCol, vecCol)
         .select(col("vec_id"), col("centroid_id"))
       val means = assigned
@@ -83,12 +82,10 @@ object Kmeans {
         .groupBy(col("centroid_id"))
         .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
           s => s.getField("m").cast("float")).as("cv_new"))
-      cents = cents.join(means, Seq("centroid_id"), "left")
+      cents.join(means, Seq("centroid_id"), "left")
         .select(col("centroid_id"),
           coalesce(col("cv_new"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-    }
-    cents
+    }.frame
   }
 
   /** k-means‖-style oversampled seeding (Bahmani et al., "Scalable
@@ -165,12 +162,11 @@ object Kmeans {
     // (SimilaritySpec, k=8): ℓ = 2k lifts IVF recall 0.446 → 0.516 over
     // an ℓ ≈ 2k/rounds pool.
     val ell = if (oversample > 0) oversample else 2 * k
-    var cands = emb.orderBy(col(idCol)).limit(1)
+    val first = Iterate.checkpoint(emb.orderBy(col(idCol)).limit(1)
       .select(col(idCol).cast("long").as("centroid_id"),
-        col(vecCol).cast("array<float>").as("cv"))
-      .localCheckpoint(true)
+        col(vecCol).cast("array<float>").as("cv")))
     val dec = "decimal(38,0)"
-    for (r <- 1 to rounds) {
+    val cands = Iterate.fixpoint(first, rounds) { (cands, r) =>
       val dmu = Similarity.assignToCentroids(emb, cands, idCol, vecCol)
         .select(col("vec_id"),
           round((lit(1.0) - col("score")) * 1e6).cast("long").as("dmu"))
@@ -183,8 +179,8 @@ object Kmeans {
         .select(col("vec_id").as("centroid_id"))
         .join(emb.select(col(idCol).cast("long").as("centroid_id"),
           col(vecCol).cast("array<float>").as("cv")), Seq("centroid_id"))
-      cands = cands.unionByName(sampled).localCheckpoint(true)
-    }
+      cands.unionByName(sampled)
+    }.frame
     // weight = corpus vectors won under the same argmax/tie contract as
     // assignment everywhere else; the inner join drops zero-weight shadows
     val weights = cands.select(col("centroid_id"))
@@ -197,13 +193,11 @@ object Kmeans {
     val byWeight = Window.orderBy(col("w").desc, col("centroid_id"))
     val top = weights.orderBy(col("w").desc, col("centroid_id")).limit(k)
       .withColumn("new_id", row_number().over(byWeight).cast("long") - 1)
-    var centers = top.join(cands, Seq("centroid_id"))
-      .select(col("new_id").as("centroid_id"), col("cv"))
-      .localCheckpoint(true)
-    val candPts = cands.join(weights, Seq("centroid_id"))
-      .select(col("centroid_id").as("cand_id"), col("cv").as("cand_cv"), col("w"))
-      .localCheckpoint(true)
-    for (_ <- 1 to refineIters) {
+    val centers = Iterate.checkpoint(top.join(cands, Seq("centroid_id"))
+      .select(col("new_id").as("centroid_id"), col("cv")))
+    val candPts = Iterate.checkpoint(cands.join(weights, Seq("centroid_id"))
+      .select(col("centroid_id").as("cand_id"), col("cv").as("cand_cv"), col("w")))
+    Iterate.fixpoint(centers, refineIters) { (centers, _) =>
       val assigned = Similarity
         .assignToCentroids(candPts, centers, "cand_id", "cand_cv")
         .select(col("vec_id").as("cand_id"), col("centroid_id"))
@@ -215,11 +209,9 @@ object Kmeans {
         .groupBy(col("centroid_id"))
         .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
           s => s.getField("m").cast("float")).as("cv_new"))
-      centers = centers.join(means, Seq("centroid_id"), "left")
+      centers.join(means, Seq("centroid_id"), "left")
         .select(col("centroid_id"), coalesce(col("cv_new"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-    }
-    centers
+    }.frame
   }
 
   /** Farthest-first (Gonzalez) initialization — the deterministic cousin
@@ -282,7 +274,7 @@ object Kmeans {
           "the corpus has fewer rows than requested centroids")
       chosen += ((next(0).getLong(0), next(0).getSeq[Float](next(0).fieldIndex("cv"))))
     }
-    chosenDf().localCheckpoint(true)
+    Iterate.checkpoint(chosenDf())
   }
 
   /** [[farthestFirstInit]] at scale — the sample-then-select form: ONE
@@ -303,11 +295,10 @@ object Kmeans {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 2, s"need k >= 2 centroids, got $k")
     require(sampleFactor >= 2, s"need sampleFactor >= 2, got $sampleFactor")
-    val sample = emb
+    val sample = Iterate.checkpoint(emb
       .select(col(idCol), col(vecCol))
       .orderBy(md5(col(idCol).cast("string")), col(idCol))
-      .limit(k * sampleFactor)
-      .localCheckpoint(true)
+      .limit(k * sampleFactor))
     farthestFirstInit(sample, k, idCol, vecCol)
   }
 

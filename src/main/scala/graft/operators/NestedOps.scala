@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * variable); chaining whole-struct `when(...).otherwise(prev)` steps
   * re-evaluates `prev` per reference and compounds multiplicatively —
   * measured at ~140 ms/row before MigrationPipeline.rewriteContainer's
-  * restructure (see its scaladoc and tools/EtlProfile).
+  * restructure (see its scaladoc).
   *
   * Attribute elements are structs with fields (name, value, dt) mirroring
   * `<custom-attribute name=... dt:dt=...>text</>` (migrate.py:161-216).

@@ -93,17 +93,16 @@ object Pq {
     val slices = array((0 until m).map(s => subVec(col(vecCol), s, subDim)): _*)
     def exploded = Par.spread(emb.select(col(idCol).as("vec_id"), col(vecCol)))
       .select(col("vec_id"), posexplode(slices).as(Seq("sub_id", "sv")))
-    var cents = exploded.filter(col("vec_id") < k)
+    val init = Iterate.checkpoint(exploded.filter(col("vec_id") < k)
       .select(col("sub_id"), col("vec_id").cast("long").as("centroid_id"),
-        col("sv").cast("array<float>").as("cv"))
-      .localCheckpoint(true)
-    val seeded = cents.count()
+        col("sv").cast("array<float>").as("cv")))
+    val seeded = init.count()
     require(seeded == m.toLong * k,
       s"PQ init found $seeded of ${m * k} seed slices with $idCol < $k — " +
         "seeding assumes ids are dense from 0; re-key the input or lower k")
     val ord = round(col("score") * 1e6).cast("long") * lit(4294967296L) -
       col("centroid_id").cast("long")
-    for (_ <- 1 to iters) {
+    Iterate.fixpoint(init, iters) { (cents, _) =>
       // Assignment rides the map-only pq_encode kernel (bit-identical
       // arithmetic — subScore/subScoreL2 with the −2.0 guard, 6-dp HALF_UP
       // rounds, packed-long ord — see PqEncode's parity contract), so each
@@ -141,12 +140,10 @@ object Pq {
         .groupBy(col("sub_id"), col("centroid_id"))
         .agg(transform(array_sort(collect_list(struct(col("i"), col("mn")))),
           s => s.getField("mn").cast("float")).as("cv_new"))
-      cents = cents.join(means, Seq("sub_id", "centroid_id"), "left")
+      cents.join(means, Seq("sub_id", "centroid_id"), "left")
         .select(col("sub_id"), col("centroid_id"),
           coalesce(col("cv_new"), col("cv")).as("cv"))
-        .localCheckpoint(true)
-    }
-    cents
+    }.frame
   }
 
   /** Encode every vector: per subspace, its max-cosine codebook entry.

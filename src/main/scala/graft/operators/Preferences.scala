@@ -78,7 +78,7 @@ object Preferences {
     * Returns one row `(n_candidates, n_edges, n_cycles)`. */
   def cycleAudit(prefs: DataFrame, winnerCol: String, loserCol: String,
       maxCandidates: Int = 1000): DataFrame = {
-    val pc = pairCounts(prefs, winnerCol, loserCol).localCheckpoint()
+    val pc = Iterate.checkpoint(pairCounts(prefs, winnerCol, loserCol))
     val nCand = pc.select(col("a").as("c"))
       .unionAll(pc.select(col("b").as("c"))).distinct().count()
     require(nCand <= maxCandidates,
@@ -148,10 +148,9 @@ object Preferences {
         least(col(winnerCol), col(loserCol)).as("a"),
         greatest(col(winnerCol), col(loserCol)).as("b"),
         when(col(winnerCol) <= col(loserCol), 1L).otherwise(0L).as("__aw"))
-    val pc = p.groupBy(col("__p"), col("a"), col("b"))
+    val pc = Iterate.checkpoint(p.groupBy(col("__p"), col("a"), col("b"))
       .agg(sum(col("__aw")).as("wins_ab"),
-        (count(lit(1)) - sum(col("__aw"))).as("wins_ba"))
-      .localCheckpoint()
+        (count(lit(1)) - sum(col("__aw"))).as("wins_ba")))
     // majority rows: ties (wins_ab = wins_ba) assert no direction
     val majority = pc.filter(col("wins_ab") =!= col("wins_ba"))
       .select(col("__p"),
@@ -283,8 +282,8 @@ object Preferences {
     * Scale shape: ONE corpus-sized hash aggregation ([[pairCounts]])
     * reduces the judgments to the candidates²-bounded relation; each
     * iteration is two keyed joins + one hash aggregation over frames
-    * bounded by candidates² (models/variants — tens), localCheckpointed
-    * per round (the iterate discipline). Arithmetic headroom: BIGINT
+    * bounded by candidates² (models/variants — tens), checkpointed
+    * per round ([[Iterate.fixpoint]]). Arithmetic headroom: BIGINT
     * holds W_i × 1e9, so ~9e9 judgments per candidate before the ANSI
     * overflow raise — shard by time window beyond that. Returns
     * `(candidate, n_wins, n_games, strength_micro)`. */
@@ -292,19 +291,19 @@ object Preferences {
       iterations: Int = 5): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    val pc = pairCounts(prefs, winnerCol, loserCol).localCheckpoint()
+    val pc = Iterate.checkpoint(pairCounts(prefs, winnerCol, loserCol))
     val games = pc.select(col("a"), col("b"),
       (col("wins_ab") + col("wins_ba")).as("n"))
-    val w = pc.select(col("a").as("candidate"), col("wins_ab").as("__w"),
+    val w = Iterate.checkpoint(pc
+      .select(col("a").as("candidate"), col("wins_ab").as("__w"),
         (col("wins_ab") + col("wins_ba")).as("__g"))
       .unionAll(pc.select(col("b").as("candidate"), col("wins_ba").as("__w"),
         (col("wins_ab") + col("wins_ba")).as("__g")))
       .groupBy(col("candidate"))
-      .agg(sum(col("__w")).as("n_wins"), sum(col("__g")).as("n_games"))
-      .localCheckpoint()
+      .agg(sum(col("__w")).as("n_wins"), sum(col("__g")).as("n_games")))
     val nc = w.agg(count(lit(1)).as("__nc"))
-    var s = w.select(col("candidate"), lit(1000000L).as("__s"))
-    for (_ <- 1 to iterations) {
+    val s = Iterate.fixpoint(w.select(col("candidate"), lit(1000000L).as("__s")),
+        iterations) { (s, _) =>
       val terms = games
         .join(s.select(col("candidate").as("a"), col("__s").as("__sa")),
           Seq("a"))
@@ -320,12 +319,11 @@ object Preferences {
         .select(col("candidate"),
           expr("(2 * n_wins * 1000000000L + __d) div (2 * __d)").as("__sn"))
       val total = unnorm.agg(sum(col("__sn")).as("__tot"))
-      s = unnorm.crossJoin(broadcast(total)).crossJoin(broadcast(nc))
+      unnorm.crossJoin(broadcast(total)).crossJoin(broadcast(nc))
         .select(col("candidate"), greatest(lit(1L), expr(
           "(2 * __sn * __nc * 1000000L + __tot) div (2 * __tot)"))
           .as("__s"))
-        .localCheckpoint()
-    }
+    }.frame
     val fitted = w.join(s, Seq("candidate"))
       .select(col("candidate"), col("n_wins"), col("n_games"),
         col("__s").as("strength_micro"))
@@ -377,7 +375,7 @@ object Preferences {
     * orderings only, never the raw judgment stream: per round one
     * pattern-partitioned window pass (suffix strength sums + prefix
     * stage terms, partitions ≤ maxListLen rows by construction) + one
-    * hash aggregation, localCheckpointed (the iterate discipline).
+    * hash aggregation, checkpointed per round ([[Iterate.fixpoint]]).
     * Headroom: BIGINT holds stage terms × total multiplicity to ~9e9
     * stages — shard by time window beyond that. Returns `(candidate,
     * n_wins, n_lists, strength_micro)` (candidate as string — the
@@ -401,31 +399,28 @@ object Preferences {
         // corrupt the distinct-ordering grain undetected
         max(when(col("__c").contains(us), 1L).otherwise(0L)).as("__sep"))
     // ONE corpus-sized aggregation to (pattern, length, multiplicity)
-    val pat = base.groupBy(col("__r"))
+    val pat = Iterate.checkpoint(base.groupBy(col("__r"))
       .agg(array_join(transform(
           array_sort(collect_list(struct(col("__k"), col("__c")))),
           x => x.getField("__c")), us).as("__p"),
         count(lit(1)).as("__m"))
       .groupBy(col("__p"))
-      .agg(max(col("__m")).as("__m"), count(lit(1)).as("__cnt"))
-      .localCheckpoint()
-    val pe = pat.select(col("__p"), col("__m"), col("__cnt"),
+      .agg(max(col("__m")).as("__m"), count(lit(1)).as("__cnt")))
+    val pe = Iterate.checkpoint(pat.select(col("__p"), col("__m"), col("__cnt"),
         posexplode(split(col("__p"), us)).as(Seq("__j0", "__c")))
       .withColumn("__k", col("__j0") + 1)
-      .drop("__j0")
-      .localCheckpoint()
-    val w = pe.groupBy(col("__c"))
+      .drop("__j0"))
+    val w = Iterate.checkpoint(pe.groupBy(col("__c"))
       .agg(sum(when(col("__k") < col("__m"), col("__cnt"))
           .otherwise(0L)).as("n_wins"),
-        sum(col("__cnt")).as("n_lists"))
-      .localCheckpoint()
+        sum(col("__cnt")).as("n_lists")))
     val nc = w.agg(count(lit(1)).as("__nc"))
     val wSfx = Window.partitionBy(col("__p")).orderBy(col("__k").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wPre = Window.partitionBy(col("__p")).orderBy(col("__k"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var s = w.select(col("__c"), lit(1000000L).as("__s"))
-    for (_ <- 1 to iterations) {
+    val s = Iterate.fixpoint(w.select(col("__c"), lit(1000000L).as("__s")),
+        iterations) { (s, _) =>
       val staged = pe.join(s, Seq("__c"))
         .withColumn("__dd", sum(col("__s")).over(wSfx))
         // stage term 1e9/D_j (half-up); the last place is not a contest
@@ -439,12 +434,11 @@ object Preferences {
         .select(col("__c"),
           expr("(2 * n_wins * 1000000000L + __d) div (2 * __d)").as("__sn"))
       val total = unnorm.agg(sum(col("__sn")).as("__tot"))
-      s = unnorm.crossJoin(broadcast(total)).crossJoin(broadcast(nc))
+      unnorm.crossJoin(broadcast(total)).crossJoin(broadcast(nc))
         .select(col("__c"), greatest(lit(1L), expr(
           "(2 * __sn * __nc * 1000000L + __tot) div (2 * __tot)"))
           .as("__s"))
-        .localCheckpoint()
-    }
+    }.frame
     val fitted = w.join(s, Seq("__c"))
       .select(col("__c").as("candidate"), col("n_wins"), col("n_lists"),
         col("__s").as("strength_micro"))

@@ -863,12 +863,11 @@ object Profile {
     * zero_division convention) roll-up rows. */
   def confusionStats(df: DataFrame, predCol: String,
       goldCol: String): DataFrame = {
-    val cells = df
+    val cells = Iterate.checkpoint(df
       .filter(col(predCol).isNotNull && col(goldCol).isNotNull)
       .select(col(predCol).cast("string").as("__p"),
         col(goldCol).cast("string").as("__g"))
-      .groupBy(col("__p"), col("__g")).agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
+      .groupBy(col("__p"), col("__g")).agg(count(lit(1)).as("__n")))
     val classes = cells.select(col("__p").as("class"))
       .unionAll(cells.select(col("__g").as("class"))).distinct()
     val tp = cells.filter(col("__p") === col("__g"))
@@ -1124,9 +1123,8 @@ object Profile {
       .filter(col(itemCol).isNotNull && col(categoryCol).isNotNull)
       .select(col(itemCol).as("__i"),
         col(categoryCol).cast("string").as("__c"))
-    val cell = lab.groupBy(col("__i"), col("__c"))
-      .agg(count(lit(1)).as("__nij"))
-      .localCheckpoint()
+    val cell = Iterate.checkpoint(lab.groupBy(col("__i"), col("__c"))
+      .agg(count(lit(1)).as("__nij")))
     val perItem = cell.groupBy(col("__i"))
       .agg(sum(col("__nij")).as("__ni"),
         sum(col("__nij") * col("__nij")).as("__s2i"))
@@ -1194,11 +1192,11 @@ object Profile {
       xCol: String, yCol: String, maxGroupRows: Int = 4096): DataFrame = {
     require(maxGroupRows >= 2,
       s"maxGroupRows must be >= 2, got $maxGroupRows")
-    val base = df.filter(col(groupCol).isNotNull && col(idCol).isNotNull &&
+    val base = Iterate.checkpoint(df
+      .filter(col(groupCol).isNotNull && col(idCol).isNotNull &&
         col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("__g"), col(idCol).as("__i"),
-        col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-      .localCheckpoint()
+        col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y")))
     val ns = base.groupBy(col("__g")).agg(count(lit(1)).as("n"))
     val pairs = base.as("l")
       .join(base.as("r"), col("l.__g") === col("r.__g") &&
@@ -1298,9 +1296,8 @@ object Profile {
       .filter(col(unitCol).isNotNull && col(categoryCol).isNotNull)
       .select(col(unitCol).as("__u"),
         col(categoryCol).cast("string").as("__c"))
-    val cell = lab.groupBy(col("__u"), col("__c"))
-      .agg(count(lit(1)).as("__nuc"))
-      .localCheckpoint()
+    val cell = Iterate.checkpoint(lab.groupBy(col("__u"), col("__c"))
+      .agg(count(lit(1)).as("__nuc")))
     val perUnit = cell.groupBy(col("__u"))
       .agg(sum(col("__nuc")).as("__nu"),
         sum(col("__nuc") * col("__nuc")).as("__s2u"))
@@ -1486,7 +1483,7 @@ object Profile {
       .select(col(groupCol).as("__g"), col(scoreCol).cast("long").as("__s"),
         when(col(labelCol).cast("boolean"), 1L).otherwise(0L).as("__y"))
     // distinct-score grain: ONE corpus-sized hash aggregation
-    val d = base.groupBy(col("__g"), col("__s"))
+    val d = Iterate.checkpoint(base.groupBy(col("__g"), col("__s"))
       .agg(sum(col("__y")).as("__p"),
         sum(lit(1L) - col("__y")).as("__n"),
         count(lit(1)).as("__c"))
@@ -1494,14 +1491,12 @@ object Profile {
       // bare `div` truncates toward zero on negatives, floor(double)
       // loses exactness past 2^53; pmod makes the numerator divisible
       .withColumn("__b",
-        expr(s"(__s - pmod(__s, ${bucketWidth}L)) div ${bucketWidth}L"))
-      .localCheckpoint()
+        expr(s"(__s - pmod(__s, ${bucketWidth}L)) div ${bucketWidth}L")))
     // bucket-grain totals + cross-bucket prefix (self-join bounded by
     // maxBuckets² per group, cap-guarded below)
-    val bt = d.groupBy(col("__g"), col("__b"))
+    val bt = Iterate.checkpoint(d.groupBy(col("__g"), col("__b"))
       .agg(sum(col("__p")).as("__bp"), sum(col("__n")).as("__bn"),
-        sum(col("__c")).as("__bc"))
-      .localCheckpoint()
+        sum(col("__c")).as("__bc")))
     val preB = bt.as("a")
       .join(bt.as("lo"),
         col("a.__g") === col("lo.__g") && col("lo.__b") < col("a.__b"),
@@ -1601,14 +1596,12 @@ object Profile {
         col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(col(groupCol).as("__g"), col(scoreCol).cast("long").as("__s"),
         when(col(labelCol).cast("boolean"), 0L).otherwise(1L).as("__e"))
-    val d = base.groupBy(col("__g"), col("__s"))
+    val d = Iterate.checkpoint(base.groupBy(col("__g"), col("__s"))
       .agg(sum(col("__e")).as("__de"), count(lit(1)).as("__dc"))
       .withColumn("__b",
-        expr(s"(__s - pmod(__s, ${bucketWidth}L)) div ${bucketWidth}L"))
-      .localCheckpoint()
-    val bt = d.groupBy(col("__g"), col("__b"))
-      .agg(sum(col("__de")).as("__be"), sum(col("__dc")).as("__bc"))
-      .localCheckpoint()
+        expr(s"(__s - pmod(__s, ${bucketWidth}L)) div ${bucketWidth}L")))
+    val bt = Iterate.checkpoint(d.groupBy(col("__g"), col("__b"))
+      .agg(sum(col("__de")).as("__be"), sum(col("__dc")).as("__bc")))
     val preB = bt.as("a")
       .join(bt.as("lo"),
         col("a.__g") === col("lo.__g") && col("lo.__b") < col("a.__b"),

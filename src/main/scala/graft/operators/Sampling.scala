@@ -303,8 +303,8 @@ object Sampling {
     require(n <= maxDomains,
       s"$n distinct domains > maxDomains $maxDomains — the domain column " +
         "looks high-cardinality, not enum-like")
-    var w = base.withColumn("w", lit(math.floor(1e6 / n + 0.5).toLong))
-    for (r <- 1 to rounds) {
+    val init = base.withColumn("w", lit(math.floor(1e6 / n + 0.5).toLong))
+    Iterate.fixpoint(init, rounds) { (w, r) =>
       val raw = Iterate.checkpoint(w.select(col("domain"), col("loss"),
         floor(col("w") *
           round(exp(lit(eta) * col("loss") * (lit(1e6) - col("w")) / lit(1e6)),
@@ -319,12 +319,10 @@ object Sampling {
         s"mixtureReweight: round $r total weight collapsed to 0 — every " +
           "domain's exp multiplier rounded to zero (eta*loss too " +
           "negative); rescale the loss signal or lower eta")
-      w = Iterate.checkpoint(raw
-        .select(col("domain"), col("loss"),
-          floor(col("wr") * lit(1e6) / lit(tot) + lit(0.5)).cast("long")
-            .as("w")))
-    }
-    w.select(col("domain"), col("w").as("weight_m"),
+      raw.select(col("domain"), col("loss"),
+        floor(col("wr") * lit(1e6) / lit(tot) + lit(0.5)).cast("long")
+          .as("w"))
+    }.frame.select(col("domain"), col("w").as("weight_m"),
       (col("w").cast("double") / lit(1e6)).as("weight"))
   }
 

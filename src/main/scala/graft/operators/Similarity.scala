@@ -238,9 +238,8 @@ object Similarity {
     // one stage boundary on the run: BOTH the candidate grouping and
     // the pairwise build reference it, and without the boundary each
     // would replay the upstream retrieval's whole lineage
-    val rel = run.select(col("query_id"), col("neighbor_id"),
-      round(col("score") * lit(1000000)).cast("long").as("rel_m"))
-      .localCheckpoint(true)
+    val rel = Iterate.checkpoint(run.select(col("query_id"), col("neighbor_id"),
+      round(col("score") * lit(1000000)).cast("long").as("rel_m")))
     val ev = emb.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       norm(col(vecCol)).as("__n"))
     val aSide = rel.select(col("query_id"), col("neighbor_id").as("a_id"))
@@ -375,11 +374,10 @@ object Similarity {
     val t = emb.filter(not(srcPred))
       .select(col(idCol).as("tgt_id"), col(vecCol).as("tv"),
         nativeNorm(sp, col(vecCol)).as("tn"))
-    val c = spread(t).crossJoin(broadcast(s))
+    val c = Iterate.checkpoint(spread(t).crossJoin(broadcast(s))
       .select(col("src_id"), col("tgt_id"),
         round(round(nativeDot(sp, col("sv"), col("tv"))
-          / (col("sn") * col("tn")), 6) * 1e6).cast("long").as("cm"))
-      .localCheckpoint()
+          / (col("sn") * col("tn")), 6) * 1e6).cast("long").as("cm")))
     val sx = perQueryTopK(c.select(col("src_id").as("query_id"),
         col("tgt_id").as("neighbor_id"), col("cm").cast("double").as("score")), k)
       .groupBy(col("query_id"))
@@ -702,9 +700,8 @@ object Similarity {
     // materialized: the assignment subtree (corpus × centroids argmax)
     // feeds the pair self-join twice AND the final status join — without
     // a checkpoint Spark re-executes it per consumer
-    val assign = assignToCentroids(emb, cents, idCol, vecCol)
-      .select(col("vec_id"), col("centroid_id"))
-      .localCheckpoint(true)
+    val assign = Iterate.checkpoint(assignToCentroids(emb, cents, idCol, vecCol)
+      .select(col("vec_id"), col("centroid_id")))
     val members = assign.join(
       emb.select(col(idCol).as("vec_id"), col(vecCol).as("v"),
         nativeNorm(sp, col(vecCol)).as("nrm")), Seq("vec_id"))
@@ -863,7 +860,7 @@ object Similarity {
     * Scale shape: the drift is two dim-keyed aggregations; each
     * training is the [[graft.operators.Kmeans.trainFrom]] loop
     * (broadcast centroids, k·d-bounded update shuffles,
-    * localCheckpointed rounds); each search is the probed-list keyed
+    * checkpointed rounds); each search is the probed-list keyed
     * equi-join ([[ivfTopKWith]]); the exact baseline scores only the
     * bounded query slice. Returns one row per baseline query:
     * `(query_id, hits_old, recall_old_ppm, hits_new, recall_new_ppm,
@@ -884,7 +881,7 @@ object Similarity {
     // precision and silently break the advertised id-order-determinism
     // — guarded in-plan (the rewardTopK discipline).
     def seeds(df: DataFrame, m: Int, stride: Int, off: Int): DataFrame =
-      perQueryTopK(
+      Iterate.checkpoint(perQueryTopK(
         df.select(lit(0L).as("query_id"), col(idCol).as("neighbor_id"),
           (-when(abs(col(idCol).cast("long")) > lit(9007199254740992L),
             raise_error(concat(lit("reindexOnDrift: |id| exceeds 2^53 ("),
@@ -898,12 +895,10 @@ object Similarity {
           ((col("rnk") - 1) * stride + off).as("centroid_id"))
         .join(df.select(col(idCol), col(vecCol)), Seq(idCol))
         .select(col("centroid_id"),
-          col(vecCol).cast("array<float>").as("cv"))
-        .localCheckpoint(true)
+          col(vecCol).cast("array<float>").as("cv")))
     val oldInit = seeds(oldEmb, numCentroids, 1, 0)
-    val mergedInit = seeds(oldEmb, numCentroids / 2, 2, 0)
-      .unionAll(seeds(newEmb, numCentroids / 2, 2, 1))
-      .localCheckpoint(true)
+    val mergedInit = Iterate.checkpoint(seeds(oldEmb, numCentroids / 2, 2, 0)
+      .unionAll(seeds(newEmb, numCentroids / 2, 2, 1)))
     val merged = oldEmb.select(col(idCol), col(vecCol))
       .unionAll(newEmb.select(col(idCol), col(vecCol)))
     val oldCents = Kmeans.trainFrom(oldEmb, oldInit, iters, idCol, vecCol)

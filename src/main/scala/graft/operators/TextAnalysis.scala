@@ -699,11 +699,10 @@ object TextAnalysis {
     def side(df: DataFrame, s: String): DataFrame =
       df.select(col(tokCol).as("tok"),
         col(countCol).cast("long").as(s"c_$s"))
-    val joined = side(aCounts, "a").join(side(bCounts, "b"),
+    val joined = Iterate.checkpoint(side(aCounts, "a").join(side(bCounts, "b"),
         Seq("tok"), "full")
       .select(col("tok"), coalesce(col("c_a"), lit(0L)).as("ca"),
-        coalesce(col("c_b"), lit(0L)).as("cb"))
-      .localCheckpoint()
+        coalesce(col("c_b"), lit(0L)).as("cb")))
     // agg-without-groupBy on BOTH reductions: each is one row even over
     // an empty vocabulary, so the degenerate corpus surfaces as a row
     val tot = joined.agg(coalesce(sum(col("ca")), lit(0L)).as("n_a"),
@@ -1425,12 +1424,11 @@ object TextAnalysis {
       .write.mode("append").parquet(s"$dir/tombstones")
     val toksed = Par.spread(purged.filter(col(textCol).isNotNull)
       .select(tokens(lower(col(textCol))).as("toks")))
-    val pb = toksed.select(explode(shingles(col("toks"), 2)).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("__pc"))
-      .localCheckpoint(true)
-    val pu = toksed.select(explode(col("toks")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("__pc"))
-      .localCheckpoint(true)
+    val pb = Iterate.checkpoint(toksed
+      .select(explode(shingles(col("toks"), 2)).as("gram"))
+      .groupBy(col("gram")).agg(count(lit(1)).as("__pc")))
+    val pu = Iterate.checkpoint(toksed.select(explode(col("toks")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("__pc")))
     def subtract(rel: String, keyCol: String, cntCol: String,
         p: DataFrame): Unit =
       graft.sources.Sinks.rewriteParquet(spark, s"$dir/$rel", df =>
@@ -1461,11 +1459,10 @@ object TextAnalysis {
       purged: DataFrame, textCol: String = "text"): Unit = {
     purged.select(md5(col(textCol)).as("h"))
       .write.mode("append").parquet(s"$dir/tombstones")
-    val pb = Par.spread(purged.filter(col(textCol).isNotNull)
+    val pb = Iterate.checkpoint(Par.spread(purged.filter(col(textCol).isNotNull)
         .select(tokens(lower(col(textCol))).as("toks")))
       .select(explode(shingles(col("toks"), 2)).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("__pc"))
-      .localCheckpoint(true)
+      .groupBy(col("gram")).agg(count(lit(1)).as("__pc")))
     graft.sources.Sinks.rewriteParquet(spark, s"$dir/bigrams", df =>
       df.join(broadcast(pb), Seq("gram"), "left")
         .select(col("gram"),
@@ -1677,11 +1674,10 @@ object TextAnalysis {
       purged: DataFrame, textCol: String = "text"): Unit = {
     purged.select(md5(col(textCol)).as("h"))
       .write.mode("append").parquet(s"$dir/tombstones")
-    val pt = Par.spread(purged.filter(col(textCol).isNotNull)
+    val pt = Iterate.checkpoint(Par.spread(purged.filter(col(textCol).isNotNull)
         .select(tokens(lower(col(textCol))).as("toks")))
       .select(explode(shingles(col("toks"), 3)).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("__pc"))
-      .localCheckpoint(true)
+      .groupBy(col("gram")).agg(count(lit(1)).as("__pc")))
     graft.sources.Sinks.rewriteParquet(spark, s"$dir/trigrams", df =>
       df.join(broadcast(pt), Seq("gram"), "left")
         .select(col("gram"),
@@ -2210,10 +2206,9 @@ object TextAnalysis {
       .groupBy(col("tok")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxTokenDf)
       .select(col("tok"))
-    val pairs = candTok.join(rare, Seq("tok"), "left_semi")
+    val pairs = Iterate.checkpoint(candTok.join(rare, Seq("tok"), "left_semi")
       .join(seedTok.join(rare, Seq("tok"), "left_semi"), Seq("tok"))
-      .select(col("__cid"), col("__sid")).distinct()
-      .localCheckpoint()
+      .select(col("__cid"), col("__sid")).distinct())
     val scored = pairs.join(ct, Seq("__cid")).join(st, Seq("__sid"))
       .select(col("__cid"), col("__sid"),
         call_function("lcs_tokens", col("__stext"), col("__ctext"))
@@ -2326,11 +2321,11 @@ object TextAnalysis {
       .filter(col("__df") <= maxTokenDf)
       .select(col("tok"))
     val banded = candTok.join(rare, Seq("tok"), "left_semi")
-    val pairs = banded.select(col("tok"), col("__cid").as("__lo"))
+    val pairs = Iterate.checkpoint(banded
+      .select(col("tok"), col("__cid").as("__lo"))
       .join(banded.select(col("tok"), col("__cid").as("__hi")), Seq("tok"))
       .filter(col("__lo") < col("__hi"))
-      .select(col("__lo"), col("__hi")).distinct()
-      .localCheckpoint()
+      .select(col("__lo"), col("__hi")).distinct())
     val scored = pairs
       .join(ct.select(col("__cid").as("__lo"), col("__ctext").as("__lt")),
         Seq("__lo"))
@@ -2403,31 +2398,38 @@ object TextAnalysis {
         .select(col("__lo"), col("__hi"))
         .join(nodes.select(col("__cid").as("__lo")), Seq("__lo"), "left_semi")
         .join(nodes.select(col("__cid").as("__hi")), Seq("__hi"), "left_semi"))
-    var und = nodes
-    var acc = nodes.limit(0)
-    var round = 0
-    var done = und.isEmpty
-    while (round < maxRounds && !done) {
-      val blockedByUndecided = edges
-        .join(und.select(col("__cid").as("__lo")), Seq("__lo"), "left_semi")
-        .select(col("__hi").as("__cid")).distinct()
-      val decidable = und.join(blockedByUndecided, Seq("__cid"), "left_anti")
-      val newAcc = decidable.join(
-        edges.join(acc.select(col("__cid").as("__lo")), Seq("__lo"),
-            "left_semi")
-          .select(col("__hi").as("__cid")).distinct(),
-        Seq("__cid"), "left_anti")
-      acc = graft.operators.Iterate.checkpoint(acc.unionAll(newAcc))
-      und = graft.operators.Iterate.checkpoint(
-        und.join(decidable, Seq("__cid"), "left_anti"))
-      done = und.isEmpty
-      round += 1
-    }
-    if (!done) throw new IllegalStateException(
-      s"selfInstructLoop: blocker chains deeper than maxRounds=" +
-        s"$maxRounds are still undecided — raise maxRounds (rounds " +
-        "track the longest ≥threshold similarity chain, not candidate " +
-        "count) or lower thresholdPpm upstream")
+    // one frame per round: the accepted candidates (`__acc`) and the
+    // still-undecided ones; a round drops the candidates it rejects
+    val allDecided = (st: DataFrame) => st.filter(!col("__acc")).isEmpty
+    val init = nodes.withColumn("__acc", lit(false))
+    val decided =
+      if (allDecided(init)) init
+      else {
+        val loop = graft.operators.Iterate.fixpoint(init, maxRounds,
+            Some(allDecided)) { (st, _) =>
+          val und = st.filter(!col("__acc")).select(col("__cid"))
+          val acc = st.filter(col("__acc")).select(col("__cid"))
+          val blockedByUndecided = edges
+            .join(und.select(col("__cid").as("__lo")), Seq("__lo"), "left_semi")
+            .select(col("__hi").as("__cid")).distinct()
+          val decidable = und.join(blockedByUndecided, Seq("__cid"), "left_anti")
+          val newAcc = decidable.join(
+            edges.join(acc.select(col("__cid").as("__lo")), Seq("__lo"),
+                "left_semi")
+              .select(col("__hi").as("__cid")).distinct(),
+            Seq("__cid"), "left_anti")
+          acc.unionAll(newAcc).withColumn("__acc", lit(true))
+            .unionAll(und.join(decidable, Seq("__cid"), "left_anti")
+              .withColumn("__acc", lit(false)))
+        }
+        if (!loop.converged) throw new IllegalStateException(
+          s"selfInstructLoop: blocker chains deeper than maxRounds=" +
+            s"$maxRounds are still undecided — raise maxRounds (rounds " +
+            "track the longest ≥threshold similarity chain, not candidate " +
+            "count) or lower thresholdPpm upstream")
+        loop.frame
+      }
+    val acc = decided.filter(col("__acc")).select(col("__cid"))
     val blockedBy = edges
       .join(acc.select(col("__cid").as("__lo")), Seq("__lo"), "left_semi")
       .groupBy(col("__hi")).agg(min(col("__lo")).as("__bb"))
@@ -3108,8 +3110,8 @@ object TextAnalysis {
         explode(call_function("token_bucket_tf", col("toks"), lit(dims))))
       .select(col("doc_id"), col("y"), col("key").as("b"),
         col("value").as("tf")))
-    var w = tf.select(col("b"), lit(0L).as("wm")).limit(0)
-    (1 to rounds).foreach { _ =>
+    Iterate.fixpoint(tf.select(col("b"), lit(0L).as("wm")).limit(0),
+        rounds) { (w, _) =>
       val margins = tf
         .join(broadcast(w), Seq("b"), "left")
         .groupBy(col("doc_id"), col("y"))
@@ -3119,12 +3121,11 @@ object TextAnalysis {
         .select(col("doc_id"))
       val upd = tf.join(mis, Seq("doc_id"))
         .groupBy(col("b")).agg(sum(col("y") * col("tf")).as("__u"))
-      w = Iterate.checkpoint(w.join(upd, Seq("b"), "full_outer")
+      w.join(upd, Seq("b"), "full_outer")
         .select(col("b"),
           (coalesce(col("wm"), lit(0L)) + coalesce(col("__u"), lit(0L)))
-            .as("wm")))
-    }
-    w.select(col("b").as("bucket"), col("wm"))
+            .as("wm"))
+    }.frame.select(col("b").as("bucket"), col("wm"))
   }
 
   /** Hashed character-n-gram TF relation `(doc_id, b, tf)` — the
@@ -3228,8 +3229,8 @@ object TextAnalysis {
       .select(col("doc_id"), col("c"),
         when(col("__lang") === col("c"), 1L).otherwise(-1L).as("y"),
         col("b"), col("tf")))
-    var w = tflc.select(col("c"), col("b"), lit(0L).as("wm")).limit(0)
-    (1 to rounds).foreach { _ =>
+    Iterate.fixpoint(tflc.select(col("c"), col("b"), lit(0L).as("wm")).limit(0),
+        rounds) { (w, _) =>
       val margins = tflc.join(broadcast(w), Seq("c", "b"), "left")
         .groupBy(col("doc_id"), col("c"), col("y"))
         .agg(sum(col("tf") * coalesce(col("wm"), lit(0L))).as("__m"))
@@ -3237,12 +3238,11 @@ object TextAnalysis {
         .select(col("doc_id"), col("c"))
       val upd = tflc.join(mis, Seq("doc_id", "c"))
         .groupBy(col("c"), col("b")).agg(sum(col("y") * col("tf")).as("__u"))
-      w = Iterate.checkpoint(w.join(upd, Seq("c", "b"), "full_outer")
+      w.join(upd, Seq("c", "b"), "full_outer")
         .select(col("c"), col("b"),
           (coalesce(col("wm"), lit(0L)) + coalesce(col("__u"), lit(0L)))
-            .as("wm")))
-    }
-    w.select(col("c").as("lang"), col("b").as("bucket"), col("wm"))
+            .as("wm"))
+    }.frame.select(col("c").as("lang"), col("b").as("bucket"), col("wm"))
   }
 
   /** Trained language-ID INFERENCE: per document, the argmax of

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Q
-import graft.operators.{Curation, Dsir}
+import graft.operators.{Curation, Dsir, Iterate}
 import graft.sources.Tables
 
 /** The end-to-end curation composition: one query running the full
@@ -535,9 +535,8 @@ object CurationQueries extends graft.QueryPack {
         val dd = graft.operators.Dedup.paragraphDedup(
           Tables.documents(s, d).select(col("doc_id"), page.as("text")),
           "text", "doc_id")
-        val en = dd.filter(graft.operators.TextAnalysis.langId(
-            graft.operators.TextAnalysis.tokens(col("text_dedup"))) === "en")
-          .localCheckpoint()
+        val en = Iterate.checkpoint(dd.filter(graft.operators.TextAnalysis.langId(
+            graft.operators.TextAnalysis.tokens(col("text_dedup"))) === "en"))
         graft.operators.TextAnalysis.bigramPerplexity(en, "text_dedup",
             "doc_id", headPpl = 39.5, tailPpl = 44.5)
           .join(en.select(col("doc_id"), col("n_dropped")), Seq("doc_id"))

@@ -293,13 +293,13 @@ object Sinks {
     // NULL` the moment the consumer selected a column subset — and no
     // conf restores detection for pruned plans). An audit is
     // definitionally a full-row parse, so the verdict is pinned behind a
-    // lazy localCheckpoint: the file parses ONCE with every column
+    // lazy checkpoint: the file parses ONCE with every column
     // required, the first action materializes it, and downstream
     // projections prune the materialized rows — never the parse. This is
     // the "parse CSV once, then split" landing pattern; pipelines
     // wanting a durable landing write `good`/`bad` straight to parquet
     // and get the same single-parse guarantee.
-    val pinned = raw.localCheckpoint(false)
+    val pinned = graft.operators.Iterate.checkpoint(raw, eager = false)
     val good = pinned.filter(col("_corrupt_record").isNull)
       .drop("_corrupt_record")
     val bad = pinned.filter(col("_corrupt_record").isNotNull)

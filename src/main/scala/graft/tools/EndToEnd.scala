@@ -127,13 +127,13 @@ object EndToEnd {
     val res = Result(nDocs, nCurated, nTrain, nSafe, nHostKept, nClean,
       nPacked, nPacks, outDir)
     manifest(spark, res).write.mode("overwrite").parquet(s"$outDir/manifest")
-    // NOTE: the checkpoint blocks behind train/clean are RDD-level
-    // storage — Dataset.unpersist would be a no-op on them; local-mode
-    // blocks free when the checkpointed RDDs are garbage-collected
-    // after this method's references drop. A scheduler embedding many
-    // runs in one session should either accept that GC latency or set
-    // a checkpoint dir (reliable files + the cleaner flag — see
-    // Iterate's housekeeping note).
+    // NOTE: train/safe/hostKept/clean are one-off Iterate.checkpoint
+    // pins, not fixpoint rounds, so nothing here releases them; a
+    // Dataset.unpersist would free nothing (a checkpoint's blocks sit
+    // under its LogicalRDD's RDD — GraftSqlBridge.releaseCheckpoint).
+    // Local-mode blocks free when the context cleaner collects those
+    // RDDs after this method's references drop; reliable-mode files
+    // need the cleaner flag (see Iterate's doc on who releases what).
     res
   }
 

@@ -3,15 +3,20 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Iterate, TextAnalysis}
+
 /** Dev tool: empirical scaling probe (the SCALE.md "Measured scaling"
   * harness, committed this round so the numbers are reproducible).
   *
   * Corpus mode — `runMain graft.tools.ScaleProbe q_d14_span_dedup,q_x17_pii_redact`:
   * amplifies the sf0.1 documents corpus ×1/×4/×16 with TOKEN-SALTED
-  * copies (copy k prefixes every token with `c<k>`, so cross-copy
-  * shingles/spans never collide and the dup structure stays constant —
-  * plain duplication would grow candidate pairs quadratically in the
-  * copy count, an artifact of duplication, not scale), then runs each
+  * copies (copy k prefixes every non-stopword token with `c<k>`, so
+  * cross-copy shingles/spans do not collide and the dup structure stays
+  * constant — plain duplication would grow candidate pairs
+  * quadratically in the copy count, an artifact of duplication, not
+  * scale; stopwords stay as they are, so every copy keeps the
+  * original's stopword ratio and passes the same language-ID and
+  * quality gates), then runs each
   * named registered query with a full warmup pass + min-of-2, same
   * protocol as Bench.
   *
@@ -192,7 +197,7 @@ object ScaleProbe {
           .select((col("media_id") + 100000000L).as("media_id"),
             expr("ahash ^ (CAST(1 AS BIGINT) << CAST(media_id % 32 AS INT))")
               .as("ahash"))
-        val hashes = base.unionAll(twins).localCheckpoint()
+        val hashes = Iterate.checkpoint(base.unionAll(twins))
         def runMatch(): Double = time {
           graft.operators.Dedup.connectedComponents(
             graft.operators.Multimodal.hashNearDupPairs(hashes, 4, 8, 3))
@@ -227,8 +232,8 @@ object ScaleProbe {
         }
         runFp()
         val tF = Seq(runFp(), runFp()).min
-        val fo = Multimodal.audioFingerprint(spark, origs).localCheckpoint()
-        val fv = Multimodal.audioFingerprint(spark, varts).localCheckpoint()
+        val fo = Iterate.checkpoint(Multimodal.audioFingerprint(spark, origs))
+        val fv = Iterate.checkpoint(Multimodal.audioFingerprint(spark, varts))
         def runMatch(): Double = time {
           Multimodal.matchByHashDistinct(fo, fv, 4, 8, 3)
             .write.format("noop").mode("overwrite").save()
@@ -267,10 +272,10 @@ object ScaleProbe {
         }
         runFp()
         val tF = Seq(runFp(), runFp()).min
-        val fo = Multimodal.videoFingerprint(spark, origs, 4, 4, 4, 2)
-          .localCheckpoint()
-        val fv = Multimodal.videoFingerprint(spark, varts, 4, 4, 4, 2)
-          .localCheckpoint()
+        val fo = Iterate.checkpoint(
+          Multimodal.videoFingerprint(spark, origs, 4, 4, 4, 2))
+        val fv = Iterate.checkpoint(
+          Multimodal.videoFingerprint(spark, varts, 4, 4, 4, 2))
         def runMatch(): Double = time {
           Multimodal.matchByHashDistinct(fo, fv, 4, 8, 3)
             .write.format("noop").mode("overwrite").save()
@@ -781,15 +786,14 @@ object ScaleProbe {
           marker.createNewFile()
         }
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val pairs = emb.filter(col("vec_id") % 2 === 0)
+        val pairs = Iterate.checkpoint(emb.filter(col("vec_id") % 2 === 0)
           .select(expr("vec_id div 2").as("pair_id"),
             col("embedding").as("img_emb"))
           .join(emb.filter(col("vec_id") % 2 === 1)
             .select(expr("vec_id div 2").as("pair_id"),
               col("embedding").as("txt_emb")), Seq("pair_id"))
           .withColumn("source",
-            concat(lit("s"), (col("pair_id") % 4).cast("string")))
-          .localCheckpoint()
+            concat(lit("s"), (col("pair_id") % 4).cast("string"))))
         def brute(): Double = time {
           Multimodal.pairAlignment(pairs, "pair_id", "source",
             "img_emb", "txt_emb", 100000L, minePred = lit(true))
@@ -1093,8 +1097,8 @@ object ScaleProbe {
           marker.createNewFile()
         }
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val cb = Pq.trainCodebooks(emb.filter(col("vec_id") < 1000),
-          16, 64, 256, 2, metric = "l2").localCheckpoint()
+        val cb = Iterate.checkpoint(Pq.trainCodebooks(
+          emb.filter(col("vec_id") < 1000), 16, 64, 256, 2, metric = "l2"))
         cb.count()
         def rel(): Double = time {
           Pq.encode(emb, cb, 16, 64, metric = "l2")
@@ -1149,11 +1153,16 @@ object ScaleProbe {
   private def amplify(spark: SparkSession, src: String, dst: String, f: Int): Unit = {
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val n = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
+    // stopwords stay unsalted: language ID and the quality gates read
+    // stopword ratios, which a salted "c3the" would zero in every copy
+    val stop =
+      array(TextAnalysis.langStopwords.flatMap(_._2).distinct.map(lit): _*)
     (0 until f).map { k =>
       docs.select(
         (col("doc_id") + lit(k * n)).as("doc_id"),
         concat_ws(" ", transform(split(col("text"), "\\s+"),
-          t => concat(lit(s"c$k"), t))).as("text"),
+          t => when(array_contains(stop, t), t)
+            .otherwise(concat(lit(s"c$k"), t)))).as("text"),
         col("lang"), col("source"), col("n_chars"))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")

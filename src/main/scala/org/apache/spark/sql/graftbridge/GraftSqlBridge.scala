@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.SparkStrategy
   * subpackage of `org.apache.spark.sql` (the standard technique for Spark
   * extension libraries that need to wrap a custom [[LogicalPlan]] into a
   * public DataFrame). Everything else in graft stays on public API; only
-  * these four entry points live here, so the internal surface area stays
+  * the entry points below live here, so the internal surface area stays
   * a handful of lines wide and easy to audit against Spark upgrades.
   */
 object GraftSqlBridge {
@@ -67,6 +67,21 @@ object GraftSqlBridge {
       case _ => df
     }
   }
+
+  /** Free a checkpointed frame's blocks. A checkpoint's rows live under
+    * the RDD its [[org.apache.spark.sql.execution.LogicalRDD]] wraps;
+    * `Dataset.unpersist` looks the frame up in the cache manager, where
+    * a checkpoint never is, and so frees nothing. Unpersisting the
+    * wrapped RDD drops it from `getPersistentRDDs` and removes its
+    * blocks before returning. Any later read of the frame fails loudly
+    * with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. A frame that is not a
+    * bare checkpoint is left alone. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = true)
+      case _ =>
+    }
 
   /** Idempotently add a planner strategy to the session (the runtime
     * equivalent of `spark.sql.extensions` config-time injection). */

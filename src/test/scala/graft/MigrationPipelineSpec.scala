@@ -93,7 +93,7 @@ class MigrationPipelineSpec extends AnyFunSuite {
       |4123Ö47,NEWO,srcO,SO,Store O,false,-3D
       |""".stripMargin
 
-  private lazy val result = {
+  private def runFixture(): MigrationPipeline.MigrationResult = {
     val dir = Files.createTempDirectory("graft-etl").toString
     Files.writeString(Paths.get(s"$dir/export.xml"), fixtureXml)
     Files.writeString(Paths.get(s"$dir/mapping.csv"), fixtureCsv)
@@ -107,6 +107,8 @@ class MigrationPipelineSpec extends AnyFunSuite {
     MigrationPipeline.run(spark, cfg)
   }
 
+  private lazy val result = runFixture()
+
   private lazy val outXmlText = Files.readString(Paths.get(result.outputXmlPath))
   private lazy val outDf = CustomerXml.read(spark, result.outputXmlPath).cache()
   private lazy val logLines =
@@ -119,6 +121,12 @@ class MigrationPipelineSpec extends AnyFunSuite {
       .select(col("a._name"), col("a._VALUE"), col("a.`_dt:dt`"))
       .as[(String, String, String)].collect()
       .map { case (n, v, d) => n -> (v, d) }.toMap
+  }
+
+  test("run unpersists what it caches: the persisted RDD set is unchanged") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    runFixture()
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("V6 summary counts: 7 found / 8 distinct csv ids") {
