@@ -98,14 +98,33 @@ object CustomerXml {
     } finally in.close()
   }
 
+  private val declaration = "version=\"1.0\" encoding=\"UTF-8\""
+
   /** K1 — delta-XML sink. Each part file is a complete document with the
     * propagated envelope; `validateName=false` lets namespaced names
-    * (dt:dt, xsi:schemaLocation) through the Stax writer. */
-  def write(df: DataFrame, path: String, rootTag: String): Unit =
+    * (dt:dt, xsi:schemaLocation) through the Stax writer.
+    *
+    * The writer opens the envelope at a part's first row, so a part with
+    * no rows comes out as an empty file, which is not a document. That is
+    * the one part written when `df` has no rows (no CSV id matched), and
+    * part 0 whenever its partition is empty: such parts get the envelope
+    * with no `<customer>` in it. */
+  def write(df: DataFrame, path: String, rootTag: String): Unit = {
     df.write.mode("overwrite").format("xml")
       .option("rowTag", "customer")
       .option("rootTag", rootTag)
-      .option("declaration", "version=\"1.0\" encoding=\"UTF-8\"")
+      .option("declaration", declaration)
       .option("validateName", "false")
       .save(path)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val envelope = s"<?xml $declaration?>\n<$rootTag>\n</${rootTag.takeWhile(!_.isWhitespace)}>"
+    fs.listStatus(dir)
+      .filter(st => st.getPath.getName.startsWith("part-") && st.getLen == 0)
+      .foreach { st =>
+        val out = fs.create(st.getPath, true)
+        try out.write(envelope.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
+  }
 }

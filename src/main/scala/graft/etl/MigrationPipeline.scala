@@ -19,6 +19,15 @@ import graft.operators.NestedOps.AttrRule
   * shuffle of the big side in the fast path, so the same plan holds on a
   * 1000-executor cluster reading a 100 TB export.
   *
+  * [[run]] scans the export once. The join's output (`matched`) is
+  * persisted, and every consumer reads it: the delta-XML write (the one
+  * action that scans the export and fills the persisted blocks), the log's
+  * re-join and the `found` count. Persisting it is safe at any export
+  * size because it is bounded by the CSV: (join_key, key_ordinal) is
+  * unique among the mapping rows, and (_id, key_ordinal) is unique among
+  * the customers (by the ordinal in strict mode; the fast path assumes
+  * unique ids), so each mapping row meets at most one customer.
+  *
   * Replicated reference quirks (each cited):
   *  - duplicate CSV keys consume successive same-id XML customers
   *    ordinally, all with the FIRST row's values (migrate.py:115 re-probe
@@ -291,7 +300,10 @@ object MigrationPipeline {
       CustomerXml.read(spark, cfg.xmlPath, cfg.customerSchema),
       cfg.strictDuplicateSemantics)
 
-    val matched = coreJoin(customers, prepared)
+    // CSV-bounded (see the object doc), so it fits wherever `prepared`
+    // does. The XML write below is the only action that scans the export; the
+    // log and `found` read these blocks instead of parsing it again.
+    val matched = coreJoin(customers, prepared).cache()
 
     val transformed = transformMatched(matched, cfg.todayIso)
     val outCols = cfg.customerSchema.fields.map(f => col(s"`${f.name}`"))
@@ -316,11 +328,12 @@ object MigrationPipeline {
     logOut.drop("csv_idx").write.mode("overwrite")
       .option("header", "true").csv(csvTmp)
 
-    val found = log.filter(col("status") =!= "Not OK" ||
-      col("reason") =!= "Not found in source XML").count()
+    // each matched row is the one log row of its mapping row that is not
+    // "Not found in source XML"
+    val found = matched.count()
     val distinct = prepared.agg(
       countDistinct(col("current_customer_id").cast("string"))).head().getLong(0)
-    // the last action that reads the cached mapping rows
+    matched.unpersist()
     prepared.unpersist()
 
     val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)

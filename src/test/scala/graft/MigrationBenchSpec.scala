@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +24,8 @@ import graft.etl.MigrationPipeline.MigrationConfig
   *     part documents, each a complete enveloped XML file;
   *   - the V6 consistency counts match the generator's exact arithmetic
   *     over 20k rows of mixed branches (found / not-found / invalid /
-  *     default-fill / duplicate-ordinal).
+  *     default-fill / duplicate-ordinal);
+  *   - a run reads the export from storage once.
   */
 class MigrationBenchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -79,5 +83,29 @@ class MigrationBenchSpec extends AnyFunSuite {
     assert(c4("MEK_Company") === "Meca")
     assert(c4("MEK_Store_Id") === "S4")
     assert(c4("MEK_SystemID") === "6")
+  }
+
+  /** Bytes read so far through the local (`file`) Hadoop FileSystem, over
+    * every thread. Spark's InputMetrics cannot stand in: they also count
+    * reads of cached blocks. */
+  private def fileBytesRead(): Long =
+    FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file").map(_.getBytesRead).sum
+
+  test("one scan of the export: a run reads at most 1.5x the export's bytes, both modes") {
+    val exportBytes = new java.io.File(fx.xmlDir).listFiles()
+      .filter(_.getName.endsWith(".xml")).map(_.length).sum
+    for (strict <- Seq(true, false)) {
+      val out = Files.createTempDirectory("graft-etl-scan").toString
+      val before = fileBytesRead()
+      val res = MigrationPipeline.run(spark, MigrationConfig(
+        csvPath = fx.csvPath, xmlPath = fx.xmlDir, outDir = out,
+        runId = "scan20k", runDate = "2026-08-12",
+        todayIso = "2026-08-12T00:00:00+00:00",
+        strictDuplicateSemantics = strict, singleFile = strict))
+      val ratio = (fileBytesRead() - before).toDouble / exportBytes
+      info(f"strict=$strict: read $ratio%.2fx the export")
+      assert(res.customersFound === fx.expectFound)
+      assert(ratio <= 1.5, f"strict=$strict: read $ratio%.2fx the export's $exportBytes bytes")
+    }
   }
 }

@@ -93,18 +93,42 @@ class MigrationPipelineSpec extends AnyFunSuite {
       |4123Ö47,NEWO,srcO,SO,Store O,false,-3D
       |""".stripMargin
 
-  private def runFixture(): MigrationPipeline.MigrationResult = {
+  /** No id of this mapping occurs in the export. */
+  private def absentCsv: String =
+    """current_customer_id,new_customer_id,new_source_id,new_store_id,new_store_name,mandatory_reference,delivery_day
+      |X1,NX1,s1,S1,Store X1,true,-1D
+      |X2,NX2,s2,S2,Store X2,false,-2D
+      |X2,NX2b,s2b,S2b,Store X2b,true,-3D
+      |""".stripMargin
+
+  /** Both modes: the RunMigration defaults and the distributed fast path. */
+  private val modes = Seq(false, true)
+
+  private def runFixture(csv: String = fixtureCsv,
+      scaleMode: Boolean = false): MigrationPipeline.MigrationResult = {
     val dir = Files.createTempDirectory("graft-etl").toString
     Files.writeString(Paths.get(s"$dir/export.xml"), fixtureXml)
-    Files.writeString(Paths.get(s"$dir/mapping.csv"), fixtureCsv)
+    Files.writeString(Paths.get(s"$dir/mapping.csv"), csv)
     val cfg = MigrationConfig(
       csvPath = s"$dir/mapping.csv",
       xmlPath = s"$dir/export.xml",
       outDir = s"$dir/out",
       runId = "testrun",
       runDate = "2026-08-12",
-      todayIso = "2026-08-12T00:00:00+00:00")
+      todayIso = "2026-08-12T00:00:00+00:00",
+      strictDuplicateSemantics = !scaleMode,
+      singleFile = !scaleMode)
     MigrationPipeline.run(spark, cfg)
+  }
+
+  /** The contents of a single-file output, or of every part file of a
+    * distributed one. */
+  private def outputTexts(path: String, ext: String): Seq[String] = {
+    val p = Paths.get(path)
+    if (Files.isDirectory(p)) p.toFile.listFiles().toSeq
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(ext))
+      .map(f => Files.readString(f.toPath))
+    else Seq(Files.readString(p))
   }
 
   private lazy val result = runFixture()
@@ -124,9 +148,30 @@ class MigrationPipelineSpec extends AnyFunSuite {
   }
 
   test("run unpersists what it caches: the persisted RDD set is unchanged") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    runFixture()
-    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    for (scaleMode <- modes; csv <- Seq(fixtureCsv, absentCsv)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      runFixture(csv, scaleMode)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before,
+        s"scaleMode=$scaleMode, absent ids=${csv == absentCsv}")
+    }
+  }
+
+  test("no mapping id in the export: 0 found, every row not found, an envelope without customers") {
+    for (scaleMode <- modes) {
+      val res = runFixture(absentCsv, scaleMode)
+      assert(res.customersFound === 0, s"scaleMode=$scaleMode")
+      assert(res.csvDistinctIds === 2, s"scaleMode=$scaleMode")
+      val logRows = outputTexts(res.logCsvPath, ".csv")
+        .flatMap(_.trim.split("\n").toSeq.tail).sorted
+      assert(logRows === Seq(
+        "X1,NX1,Not OK,Not found in source XML",
+        "X2,NX2,Not OK,Not found in source XML",
+        "X2,NX2b,Not OK,Not found in source XML"), s"scaleMode=$scaleMode")
+      val xmls = outputTexts(res.outputXmlPath, ".xml")
+      assert(xmls.nonEmpty && xmls.forall(!_.contains("<customer")), s"scaleMode=$scaleMode")
+      assert(xmls.forall(x => x.contains("<enfinity") &&
+        x.contains("xsi:schemaLocation=\"http://example/b2b_customer.xsd\"")), s"scaleMode=$scaleMode")
+    }
   }
 
   test("V6 summary counts: 7 found / 8 distinct csv ids") {
