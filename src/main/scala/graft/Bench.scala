@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every registered query at the given scale
   * factor and prints ONE JSON line. The noop sink forces full plan
   * execution (a count() would let Catalyst prune the projection work).
@@ -17,19 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ~50 queries × several codegen stages exceeds the default 100-entry
-      // generated-class cache — keep every warmed class resident
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     def exec(name: String): Double = {
       val t0 = System.nanoTime()
@@ -43,47 +29,8 @@ object Bench {
 
     // dev filter (the driver never sets it): SPARK_GRAFT_ONLY=q_d7,q_x9
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    // per-commit dev tier (the driver never sets it):
-    // SPARK_GRAFT_TIER=flagship runs only the ~30 slowest round-13
-    // entries — they carry >70% of total wall-clock, so a regression
-    // anywhere that matters shows up here in ~1/4 the time. The full
-    // registry stays the nightly/per-round run (the driver's), which
-    // also REFRESHES this pinned list when the slow set shifts.
-    val flagship = Set("q_g10_adamic_adar", "q_g1_pagerank", "q_g7_triangles",
-      "q_g4_wpagerank", "q_g3_hits", "q_g2_ppr", "q_g6_label_prop",
-      "q_g8_kcore", "q_g11_shortest_paths", "q_g9_bfs_depth",
-      "q_x72_train_langid", "q_m13_video_match", "q_m12_audio_clusters",
-      "q_g13_assortativity", "q_m14_video_clusters", "etl_migration_100k",
-      "q_m11_audio_match", "q_sim8_kpp_ivf_topk", "q_m10_phash_clusters",
-      "q_x47_clean_train_corpus", "q_x30_topic_clusters", "q_x64_hybrid_mmr",
-      "q_g12_degree_histogram", "q_m19_media_pipeline",
-      "q_x35_topic_assign_store", "q_a10_hll_bound", "q_j12_fuzzy_join",
-      "q_d13_incremental_sigs", "q_x36_cdc_chunks", "q_x42_token_ids_store")
-    // store-twin entries: each re-runs a near-identical plan to its
-    // original from a PERSISTED store (different plan pinned — the
-    // no-rescan read path — same oracle). Together 21.9s of the 245.3s
-    // round-11 full run (8.9%): cheap enough that the driver's full run
-    // keeps them (dropping them would blind the round record to store-
-    // path regressions), big enough that a dev iterating on unrelated
-    // queries can skip them with SPARK_GRAFT_TIER=twinless (protocol
-    // note in SCALE.md; the driver never sets a tier).
-    val storeTwins = Set("q_x31_bm25_index", "q_x35_topic_assign_store",
-      "q_x41_ppl_store", "q_x53_backoff_store", "q_sim15_sq8_store",
-      "q_x60_hybrid_store", "q_x42_token_ids_store",
-      "q_x43_top_tokens_store", "q_d16_contamination_store",
-      "q_v10_quantile_store", "q_v16_cms_store", "q_v6_sketch_store",
-      "q_d13_incremental_sigs")
-    val tier = sys.env.get("SPARK_GRAFT_TIER")
-    tier.foreach(t => require(t == "flagship" || t == "twinless",
-      s"unknown SPARK_GRAFT_TIER '$t'"))
-    val tierFiltered = tier.isDefined
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
-      .filter(n => tier match {
-        case Some("flagship") => flagship.contains(n)
-        case Some("twinless") => !storeTwins.contains(n)
-        case _ => true
-      })
     names.foreach(exec) // warmup pass: codegen + JIT + FS caches
     // two measured passes, report the per-query MIN: the box sees external
     // load spikes and GC pauses that inflate single timings 2-5x; min-of-2
@@ -116,8 +63,7 @@ object Bench {
     }
     val etlName = "etl_migration_100k"
     val results =
-      if (!only.forall(_.exists(p => etlName.startsWith(p))) ||
-          (tier.contains("flagship") && !flagship.contains(etlName))) results0
+      if (!only.forall(_.exists(p => etlName.startsWith(p)))) results0
       else {
         etlRun() // warmup
         // same failure protocol as the queries: one transient failure
@@ -145,7 +91,7 @@ object Bench {
     // can't hurt it, then print it as the very last stdout of the run.
     // Only FULL runs persist — a dev-filtered run must not clobber the
     // round record with a 3-query subset.
-    if (only.isEmpty && !tierFiltered)
+    if (only.isEmpty)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), mkLine(3) + "\n")
       catch { case e: Exception => System.err.println(s"[bench] local write failed: $e") }
     // the driver keeps only the last 2000 CHARS of output and parses the

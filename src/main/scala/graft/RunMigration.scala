@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.MigrationPipeline
 import graft.etl.MigrationPipeline.MigrationConfig
 import graft.sources.Discovery
@@ -20,15 +18,9 @@ object RunMigration {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: RunMigration <csvPath|-> <xmlPath|-> <outDir> [runId] [yyyy-MM-dd]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      sys.env.get("SPARK_GRAFT_MASTER"))
 
     def resolve(arg: String, ext: String): String =
       if (arg != "-") arg

@@ -38,4 +38,26 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     qs.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** The one session recipe every main (and the test session) builds
+    * through. Its only inputs are deployment values: the core count,
+    * which also sets the shuffle partitions, and an optional master URL
+    * (default `local[cores]`). Everything else is fixed here: the graft
+    * extensions (as-of planner strategy, `asof_join` TVF, native SQL
+    * functions), AQE, UTC, a codegen cache large enough that a full
+    * query pass keeps every generated class resident (the default 100
+    * entries evicts classes before their next use), no UI, WARN logs. */
+  def session(cores: Int, master: Option[String] = None): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(master.getOrElse(s"local[$cores]"))
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

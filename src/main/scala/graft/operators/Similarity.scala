@@ -724,7 +724,7 @@ object Similarity {
   /** The paper-economics k for a corpus of `n` vectors: k ≈ n /
     * targetClusterSize (ceiling, min 1), so per-cluster pair work stays
     * O(targetClusterSize²) no matter how n grows. 250 matches the
-    * committed `ScaleProbe semdedup` protocol (k = n/250 held the x100
+    * SemDeDup growth probe recorded in SCALE.md (k = n/250 held the x100
     * probe to 10.9x time). */
   def kFor(n: Long, targetClusterSize: Int = 250): Int = {
     require(n >= 0, s"n must be non-negative, got $n")

@@ -150,12 +150,7 @@ object EndToEnd {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption
       .getOrElse(java.nio.file.Files.createTempDirectory("graft-e2e").toString)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.session(32)
     val r = run(spark, sfDir, outDir)
     println(s"""{"docs":${r.nDocs},"curated":${r.nCurated},""" +
       s""""train":${r.nTrain},"clean":${r.nClean},""" +

@@ -7,14 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.NestedOps
 import graft.operators.NestedOps.AttrRule
 
+/** The suite's one session: the main recipe at a fixed 4 cores, so test
+  * partitioning does not follow the host's `SPARK_GRAFT_CPUS`. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val cores = 4
+  lazy val spark: SparkSession = SparkEntry.session(cores)
 }
 
 class NestedOpsSpec extends AnyFunSuite {

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no `InMemoryTableScan`: nothing here caches — a cache appearing
   *     means an operator started persisting corpus data as a side effect.
   *
-  * tools/PlanAudit.scala remains the human-readable sweep (exchange
+  * `ScaleProbe audit` remains the human-readable sweep (exchange
   * counts, join strategies); this spec is the enforced subset.
   *
   * KNOWN BLIND SPOT, audited by hand instead: a query whose operator
