@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_xml}
 import org.apache.spark.sql.types._
 
 /** Schema + envelope handling for the Intershop customer-impex XML
@@ -100,31 +101,55 @@ object CustomerXml {
 
   private val declaration = "version=\"1.0\" encoding=\"UTF-8\""
 
-  /** K1 — delta-XML sink. Each part file is a complete document with the
-    * propagated envelope; `validateName=false` lets namespaced names
-    * (dt:dt, xsi:schemaLocation) through the Stax writer.
+  /** `to_xml` settings: the XML writer's own (same Stax generator, same
+    * `_` attribute prefix and `_VALUE` text field); `validateName=false`
+    * lets namespaced names (dt:dt, xsi:schemaLocation) through. */
+  private val elementOptions =
+    java.util.Map.of("rowTag", "customer", "validateName", "false")
+
+  /** K1 — delta-XML sink. Each `df` row (a customer) is serialized to its
+    * `<customer>` element by `to_xml` in the stage that computes the row,
+    * so the expensive step runs partition-parallel. Each part file is a
+    * complete document: the propagated envelope goes once around each
+    * non-empty partition's elements, and the elements are written as text.
     *
-    * The writer opens the envelope at a part's first row, so a part with
-    * no rows comes out as an empty file, which is not a document. That is
-    * the one part written when `df` has no rows (no CSV id matched), and
-    * part 0 whenever its partition is empty: such parts get the envelope
-    * with no `<customer>` in it. */
-  def write(df: DataFrame, path: String, rootTag: String): Unit = {
-    df.write.mode("overwrite").format("xml")
-      .option("rowTag", "customer")
-      .option("rootTag", rootTag)
-      .option("declaration", declaration)
-      .option("validateName", "false")
-      .save(path)
+    * `orderBy = Some(c)` writes ONE part, ordered by column `c` (which is
+    * not serialized): the single ordered task then only concatenates
+    * ready strings. `None` writes one part per partition, unordered.
+    *
+    * Spark writes an empty part when the plan has no rows at all (no CSV
+    * id matched) and for partition 0 whenever it is empty; such parts get
+    * the envelope with no `<customer>` in it. Every part is renamed from
+    * `.txt` to `.xml` in the same pass. */
+  def write(df: DataFrame, path: String, rootTag: String,
+      orderBy: Option[String] = None): Unit = {
+    val fields = df.columns.toSeq.filterNot(orderBy.contains).map(f => col(s"`$f`"))
+    val element = to_xml(struct(fields: _*), elementOptions).as("xml")
+    val elements = orderBy match {
+      case Some(c) =>
+        df.select(col(c), element).repartition(1).sortWithinPartitions(c).select("xml")
+      case None => df.select(element)
+    }
+    val open = s"<?xml $declaration?>\n<$rootTag>"
+    val close = s"</${rootTag.takeWhile(!_.isWhitespace)}>"
+    elements.as(Encoders.STRING)
+      .mapPartitions(it => if (it.hasNext) Iterator(open) ++ it ++ Iterator(close) else it)(
+        Encoders.STRING)
+      .write.mode("overwrite").text(path)
+
     val dir = new Path(path)
     val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val envelope = s"<?xml $declaration?>\n<$rootTag>\n</${rootTag.takeWhile(!_.isWhitespace)}>"
     fs.listStatus(dir)
-      .filter(st => st.getPath.getName.startsWith("part-") && st.getLen == 0)
+      .filter(st => st.getPath.getName.startsWith("part-") && st.getPath.getName.endsWith(".txt"))
       .foreach { st =>
-        val out = fs.create(st.getPath, true)
-        try out.write(envelope.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        val xml = new Path(dir, st.getPath.getName.stripSuffix(".txt") + ".xml")
+        if (st.getLen > 0) fs.rename(st.getPath, xml)
+        else {
+          val out = fs.create(xml, true)
+          try out.write(s"$open\n$close\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          finally out.close()
+          fs.delete(st.getPath, false)
+        }
       }
   }
 }

@@ -254,7 +254,8 @@ object MigrationPipeline {
       .withColumn("_id", newId)
 
     // N5 — schema-agnostic descendant TEXT replace over the user subtree
-    // (:223-225). Attribute fields (prefix "_") are not text nodes; _VALUE is.
+    // (:223-225), one column expression. Attribute fields (prefix "_")
+    // are not text nodes; _VALUE is.
     NestedOps.replaceNestedText(
       step2.withColumn("graft_new_id", newId), "user", "graft_old_id", "graft_new_id",
       skipStructField = f => f.startsWith("_") && f != "_VALUE")
@@ -293,7 +294,12 @@ object MigrationPipeline {
     customers.join(broadcast(prepared), joinCond, "inner")
   }
 
-  /** Full pipeline: returns output paths + the V6 consistency counts. */
+  /** Full pipeline: returns output paths + the V6 consistency counts.
+    *
+    * Jobs: the delta-XML write serializes each customer in the parallel
+    * transform stage ([[CustomerXml.write]]); in single-file mode one task
+    * then orders the ready `<customer>` strings by `csv_idx` and writes
+    * them. The log write and the `found` and `distinct` counts follow. */
   def run(spark: SparkSession, cfg: MigrationConfig): MigrationResult = {
     val prepared = prepareCsv(readCsv(spark, cfg.csvPath)).cache()
     val customers = prepareCustomers(
@@ -306,18 +312,17 @@ object MigrationPipeline {
     val matched = coreJoin(customers, prepared).cache()
 
     val transformed = transformMatched(matched, cfg.todayIso)
-    val outCols = cfg.customerSchema.fields.map(f => col(s"`${f.name}`"))
-    // V5: invalid-but-found customers are still emitted (:256-262)
-    val outputRaw = transformed.select(col("csv_idx") +: outCols.toIndexedSeq: _*)
-    val output =
-      if (cfg.singleFile) outputRaw.repartition(1).sortWithinPartitions("csv_idx")
-      else outputRaw
-    val outputFinal = output.drop("csv_idx")
+    val outCols = cfg.customerSchema.fields.toIndexedSeq.map(f => col(s"`${f.name}`"))
+    // V5: invalid-but-found customers are still emitted (:256-262). The
+    // single file is in CSV order; distributed parts are unordered sets.
+    val (output, order) =
+      if (cfg.singleFile) (transformed.select(col("csv_idx") +: outCols: _*), Some("csv_idx"))
+      else (transformed.select(outCols: _*), None)
 
     val dateDir = s"${cfg.outDir}/${cfg.runDate}"
     val rootTag = CustomerXml.readRootTag(spark, cfg.xmlPath)
     val xmlTmp = s"$dateDir/.xml-${cfg.runId}"
-    CustomerXml.write(outputFinal, xmlTmp, rootTag)
+    CustomerXml.write(output, xmlTmp, rootTag, order)
 
     val log = deriveLog(prepared,
       matched.select(col("join_key"), prepared("key_ordinal")))

@@ -108,7 +108,6 @@ object BleuMatches {
 
   /** Register `bleu_matches` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bleu_matches", exprs => BleuMatches(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "bleu_matches", exprs => BleuMatches(exprs.head, exprs(1)))
 }

@@ -153,6 +153,6 @@ object BpeEncode {
 
   /** Register `bpe_encode` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs => BpeEncode(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "bpe_encode", exprs => BpeEncode(exprs.head, exprs(1)))
 }

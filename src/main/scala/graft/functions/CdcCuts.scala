@@ -103,7 +103,6 @@ object CdcCuts {
 
   /** Register `cdc_cuts` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts", exprs => CdcCuts(exprs.head, exprs(1), exprs(2)),
-      "internal")
+    Registration.ensure(spark,
+      "cdc_cuts", exprs => CdcCuts(exprs.head, exprs(1), exprs(2)))
 }

@@ -142,8 +142,7 @@ object CharGramTf {
 
   /** Register `char_gram_tf` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    Registration.ensure(spark,
       "char_gram_tf",
-      exprs => CharGramTf(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "internal")
+      exprs => CharGramTf(exprs.head, exprs(1), exprs(2), exprs(3)))
 }

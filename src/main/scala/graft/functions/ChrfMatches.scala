@@ -124,7 +124,6 @@ object ChrfMatches {
 
   /** Register `chrf_matches` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chrf_matches", exprs => ChrfMatches(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "chrf_matches", exprs => ChrfMatches(exprs.head, exprs(1)))
 }

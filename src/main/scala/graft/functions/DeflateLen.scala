@@ -63,6 +63,6 @@ object DeflateLen {
 
   /** Register `deflate_len` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", exprs => DeflateLen(exprs.head), "internal")
+    Registration.ensure(spark,
+      "deflate_len", exprs => DeflateLen(exprs.head))
 }

@@ -66,6 +66,6 @@ object DistinctCount {
 
   /** Register `distinct_count` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "distinct_count", exprs => DistinctCount(exprs.head), "internal")
+    Registration.ensure(spark,
+      "distinct_count", exprs => DistinctCount(exprs.head))
 }

@@ -86,7 +86,6 @@ object EditDistTokens {
 
   /** Register `edit_dist_tokens` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "edit_dist_tokens", exprs => EditDistTokens(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "edit_dist_tokens", exprs => EditDistTokens(exprs.head, exprs(1)))
 }

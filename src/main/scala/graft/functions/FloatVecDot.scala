@@ -75,6 +75,6 @@ object FloatVecDot {
   /** Register `vec_dot` in the session's function registry; queries then
     * call it via `expr("vec_dot(a, b)")`. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "vec_dot", exprs => FloatVecDot(exprs.head, exprs(1)))
 }

@@ -111,7 +111,6 @@ object GaeFold {
 
   /** Register `gae_fold` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gae_fold", exprs => GaeFold(exprs.head, exprs(1), exprs(2)),
-      "internal")
+    Registration.ensure(spark,
+      "gae_fold", exprs => GaeFold(exprs.head, exprs(1), exprs(2)))
 }

@@ -73,6 +73,6 @@ object HexHamming {
 
   /** Register `hex_hamming` in the session's function registry. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hex_hamming", exprs => HexHamming(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "hex_hamming", exprs => HexHamming(exprs.head, exprs(1)))
 }

@@ -63,8 +63,8 @@ object JaroWinkler {
     * `expr("jaro_winkler(a, b)")`. GraftExtensions also injects it for
     * pure-SQL sessions. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)))
 
   /** Static + allocation-light so JIT inlines it into the generated
     * stage. Semantics pinned to DuckDB's jaro_winkler_similarity. */

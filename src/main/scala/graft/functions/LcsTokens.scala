@@ -83,6 +83,6 @@ object LcsTokens {
 
   /** Register `lcs_tokens` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lcs_tokens", exprs => LcsTokens(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "lcs_tokens", exprs => LcsTokens(exprs.head, exprs(1)))
 }

@@ -96,7 +96,6 @@ object MapMargin {
 
   /** Register `map_margin` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "map_margin", exprs => MapMargin(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "map_margin", exprs => MapMargin(exprs.head, exprs(1)))
 }

@@ -161,7 +161,6 @@ object MinHashBands {
 
   /** Register `minhash_bands` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands", exprs => MinHashBands(exprs.head, exprs(1), exprs(2)),
-      "internal")
+    Registration.ensure(spark,
+      "minhash_bands", exprs => MinHashBands(exprs.head, exprs(1), exprs(2)))
 }

@@ -162,8 +162,7 @@ object MmrSelect {
 
   /** Register `mmr_select` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    Registration.ensure(spark,
       "mmr_select",
-      exprs => MmrSelect(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "internal")
+      exprs => MmrSelect(exprs.head, exprs(1), exprs(2), exprs(3)))
 }

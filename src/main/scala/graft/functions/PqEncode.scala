@@ -221,6 +221,6 @@ case class PqEncode(children: Seq[Expression]) extends Expression {
 object PqEncode {
   /** Register `pq_encode` in the session's function registry. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs), "internal")
+    Registration.ensure(spark,
+      "pq_encode", exprs => PqEncode(exprs))
 }

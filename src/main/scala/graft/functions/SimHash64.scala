@@ -100,6 +100,6 @@ object SimHash64 {
 
   /** Register `simhash64` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "internal")
+    Registration.ensure(spark,
+      "simhash64", exprs => SimHash64(exprs.head))
 }

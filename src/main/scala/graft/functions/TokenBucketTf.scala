@@ -87,9 +87,8 @@ object TokenBucketTf {
 
   /** Register `token_bucket_tf` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_bucket_tf", exprs => TokenBucketTf(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "token_bucket_tf", exprs => TokenBucketTf(exprs.head, exprs(1)))
 }
 
 /** Dense sibling of [[TokenBucketTf]]: `token_tf_vec(toks, dims)`
@@ -163,7 +162,6 @@ object TokenTfVec {
 
   /** Register `token_tf_vec` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_tf_vec", exprs => TokenTfVec(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "token_tf_vec", exprs => TokenTfVec(exprs.head, exprs(1)))
 }

@@ -89,6 +89,6 @@ object UnicodeNormalize {
 
   /** Register `unicode_normalize(str, 'NFKC')` in the function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize", builder, "internal")
+    Registration.ensure(spark,
+      "unicode_normalize", builder)
 }

@@ -188,6 +188,6 @@ object UnigramEncode {
 
   /** Register `unigram_encode` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unigram_encode", exprs => UnigramEncode(exprs.head, exprs(1)), "internal")
+    Registration.ensure(spark,
+      "unigram_encode", exprs => UnigramEncode(exprs.head, exprs(1)))
 }

@@ -161,7 +161,6 @@ object WordPieceEncode {
 
   /** Register `wordpiece_encode` in the session's function registry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wordpiece_encode", exprs => WordPieceEncode(exprs.head, exprs(1)),
-      "internal")
+    Registration.ensure(spark,
+      "wordpiece_encode", exprs => WordPieceEncode(exprs.head, exprs(1)))
 }

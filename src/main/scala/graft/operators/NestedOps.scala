@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,42 +82,43 @@ object NestedOps {
 
   /** N5 — recursive, schema-agnostic descendant text replace: the Spark
     * equivalent of `for element in user.iter(): if element.text == old`
-    * (migrate.py:223-225). Walks EVERY string leaf of `treeCol` — at any
-    * struct/array/map depth — replacing values equal to the row's `oldCol`
-    * with its `newCol`. Partition-parallel row map (no shuffle); for a
-    * fixed known schema prefer enumerated `withField`s (codegen'd).
-    */
+    * (migrate.py:223-225). Rewrites EVERY string leaf of `treeCol` — at
+    * any struct/array/map depth — that equals the row's `oldCol` to its
+    * `newCol`; a null `oldCol` or `newCol` keeps the leaf. Map keys are
+    * not text and stay; `skipStructField` names struct fields (at any
+    * depth) whose subtree is left as is.
+    *
+    * One column expression built from the schema: `withField` through
+    * structs, `transform` through arrays, `transform_values` through maps,
+    * and at a string leaf `coalesce(when(leaf === old, new), leaf)`, which
+    * keeps the leaf's nullability, so the result schema is the input's.
+    * Subtrees without a string leaf are not touched. */
   def replaceNestedText(df: DataFrame, treeCol: String, oldCol: String, newCol: String,
       skipStructField: String => Boolean = _ => false): DataFrame = {
-    val schema = df.schema
-    val treeIdx = schema.fieldIndex(treeCol)
-    val oldIdx = schema.fieldIndex(oldCol)
-    val newIdx = schema.fieldIndex(newCol)
-    val treeType = schema(treeIdx).dataType
+    def quoted(name: String) = "`" + name.replace("`", "``") + "`"
+    val oldV = col(quoted(oldCol))
+    val newV = col(quoted(newCol))
 
-    def rewrite(v: Any, dt: DataType, oldV: String, newV: String): Any = (v, dt) match {
-      case (null, _) => null
-      case (s: String, StringType) => if (s == oldV) newV else s
-      case (r: Row, st: StructType) =>
-        Row.fromSeq(r.toSeq.zip(st.fields.toSeq).map { case (x, f) =>
-          if (skipStructField(f.name)) x else rewrite(x, f.dataType, oldV, newV)
-        })
-      case (a: scala.collection.Seq[_], ArrayType(et, _)) =>
-        a.map(rewrite(_, et, oldV, newV))
-      case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
-        m.map { case (k, x) => (k, rewrite(x, vt, oldV, newV)) }
-      case (x, _) => x
+    def hasText(dt: DataType): Boolean = dt match {
+      case _: StringType => true
+      case st: StructType => st.fields.exists(f => !skipStructField(f.name) && hasText(f.dataType))
+      case ArrayType(et, _) => hasText(et)
+      case MapType(_, vt, _) => hasText(vt)
+      case _ => false
     }
 
-    df.map { row =>
-      val oldV = row.getString(oldIdx)
-      val newV = row.getString(newIdx)
-      val vals = row.toSeq.toArray
-      if (oldV != null && newV != null) {
-        vals(treeIdx) = rewrite(vals(treeIdx), treeType, oldV, newV)
-      }
-      Row.fromSeq(vals.toIndexedSeq)
-    }(Encoders.row(schema))
+    def rewrite(c: Column, dt: DataType): Column = dt match {
+      case _: StringType => coalesce(when(c === oldV, newV), c)
+      case st: StructType =>
+        st.fields.filter(f => !skipStructField(f.name) && hasText(f.dataType))
+          .foldLeft(c)((acc, f) => acc.withField(quoted(f.name), rewrite(c.getField(f.name), f.dataType)))
+      case ArrayType(et, _) => transform(c, rewrite(_, et))
+      case MapType(_, vt, _) => transform_values(c, (_, v) => rewrite(v, vt))
+    }
+
+    val treeType = df.schema(treeCol).dataType
+    if (hasText(treeType)) df.withColumn(treeCol, rewrite(col(quoted(treeCol)), treeType))
+    else df
   }
 
   /** N6 — overwrite a nested timestamp-ish field (profile/creation-date ←

@@ -274,7 +274,7 @@ case class AsOfJoinExec(
     val c = ctx.freshName("asofCmp")
 
     s"""
-       |while ($limitNotReachedCond $leftInput.hasNext()) {
+       |while ($leftInput.hasNext()) {
        |  InternalRow $leftRow = (InternalRow) $leftInput.next();
        |  ${lkEv.code}
        |  ${ltEv.code}
@@ -373,8 +373,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the tokenizer + PQ kernels too: a pure-SQL session can BPE-encode
     // against an inlined merges table and PQ-encode against an inlined
     // codebook without ever touching the DataFrame API (the per-call
-    // createOrReplaceTempFunction registrations in the operators remain
-    // for sessions built without the extensions)
+    // `register` helpers in the operators, which skip a function the
+    // session already has, remain for sessions built without the extensions)
     e.injectFunction((FunctionIdentifier("bpe_encode"),
       new ExpressionInfo(classOf[graft.functions.BpeEncode].getName, "bpe_encode"),
       exprs => graft.functions.BpeEncode(exprs.head, exprs(1))))

@@ -3,7 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+
 import graft.SparkEntry
+import graft.etl.{MigrationFixture, MigrationPipeline}
 import graft.operators.TextAnalysis
 
 /** Dev probe harness: times, traces and inspects registered queries and
@@ -15,8 +18,11 @@ import graft.operators.TextAnalysis
   *       warmup, then min / median / max of the timed runs — the arbiter
   *       for Bench movers (Bench times a query after ~110 others have
   *       churned the heap and the OS page cache)
-  *   runMain graft.tools.ScaleProbe jobs <query>     per-job wall times of
-  *       one warm run (job description, else call site): where the time goes
+  *   runMain graft.tools.ScaleProbe jobs <query|etl> per-job wall times of
+  *       one warm run, each job labelled by its last stage's operator
+  *       scopes and task count: where the time goes. `etl` is one
+  *       MigrationPipeline.run with the RunMigration defaults (strict,
+  *       single file) on the 25k-customer fixture
   *   runMain graft.tools.ScaleProbe [<queries>]      corpus growth: sf0.1
   *       documents/events/orders amplified ×1/×4/×16, warmup + min-of-2
   *   runMain graft.tools.ScaleProbe vec [<queries>]  vector growth: sf0.1
@@ -45,7 +51,10 @@ object ScaleProbe {
         val ts = Seq.fill(isoRuns)(run(spark, q, sf)).sorted
         println(f"[scaleprobe] iso $q%-28s min ${ts.head}%.2f  med ${ts(ts.size / 2)}%.2f  max ${ts.last}%.2f s   ($sf)")
       }
-      case Some("jobs") => jobs(spark, args(1), sf)
+      case Some("jobs") => args(1) match {
+        case "etl" => jobs(spark, "etl 25k", migrate(spark, 25000, distributed = false))
+        case q => jobs(spark, s"$q ($sf)", run(spark, q, sf))
+      }
       case Some("etl") => etl(spark)
       case Some("plan") => list(1).foreach { q =>
         println(s"########## $q ##########")
@@ -68,9 +77,10 @@ object ScaleProbe {
     SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
   }
 
-  /** Warmup, then one recorded run with a listener printing every Spark
-    * job's start offset and wall time. */
-  private def jobs(spark: SparkSession, q: String, sf: String): Unit = {
+  /** Warmup, then one recorded run of `once` with a listener printing
+    * every Spark job's start offset, wall time, and its last stage's
+    * operator scopes (AQE stage jobs carry no call site) and task count. */
+  private def jobs(spark: SparkSession, what: String, once: => Double): Unit = {
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var record = false
     @volatile var t0ns = System.nanoTime()
@@ -78,12 +88,11 @@ object ScaleProbe {
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .map(_.getProperty("spark.job.description", "")).getOrElse("")
-          val site = Option(js.properties)
-            .map(_.getProperty("callSite.short", "")).getOrElse("")
+          val last = js.stageInfos.maxBy(_.stageId)
+          val scopes = last.rddInfos.sortBy(-_.id)
+            .flatMap(GraftSqlBridge.scopeName).map(_.replaceAll(" \\(\\d+\\)$", "")).distinct
           starts.put(js.jobId, (System.nanoTime(),
-            if (desc.nonEmpty) desc else site))
+            s"${scopes.mkString("[", ",", "]")} ${last.numTasks} tasks"))
         }
         override def onJobEnd(
             je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -92,28 +101,32 @@ object ScaleProbe {
             println(f"[jobs] #${je.jobId}%-4d @${(st._1 - t0ns) / 1e9}%8.3f ${(System.nanoTime() - st._1) / 1e9}%7.3f s  ${st._2}")
         }
       })
-    run(spark, q, sf) // warmup
+    once // warmup
     record = true
     t0ns = System.nanoTime()
-    val t = run(spark, q, sf)
-    println(f"[jobs] total $q $t%.2f s   ($sf)")
+    val t = once
+    println(f"[jobs] total $what $t%.2f s")
   }
 
-  private def etl(spark: SparkSession): Unit = {
-    import graft.etl.{MigrationFixture, MigrationPipeline}
-    Seq(12500, 25000, 100000).foreach { n =>
-      val fx = MigrationFixture.ensure(s"target/scaleprobe/etl$n", n, files = 8)
-      def once(): Double = time {
-        MigrationPipeline.run(spark, MigrationPipeline.MigrationConfig(
-          csvPath = fx.csvPath, xmlPath = fx.xmlDir,
-          outDir = s"target/scaleprobe/etl$n-out", runId = "probe",
-          runDate = "2026-01-01", todayIso = "2026-01-01T00:00:00+00:00",
-          strictDuplicateSemantics = false, singleFile = false))
-      }
-      once() // warmup
-      println(f"[scaleprobe] etl n=$n%-7d ${math.min(once(), once())}%.2f s")
+  /** One MigrationPipeline.run on the n-customer fixture in 8 shards:
+    * the RunMigration defaults, or the distributed fast path. */
+  private def migrate(spark: SparkSession, n: Int, distributed: Boolean): Double = {
+    val fx = MigrationFixture.ensure(s"target/scaleprobe/etl$n", n, files = 8)
+    time {
+      MigrationPipeline.run(spark, MigrationPipeline.MigrationConfig(
+        csvPath = fx.csvPath, xmlPath = fx.xmlDir,
+        outDir = s"target/scaleprobe/etl$n-out", runId = "probe",
+        runDate = "2026-01-01", todayIso = "2026-01-01T00:00:00+00:00",
+        strictDuplicateSemantics = !distributed, singleFile = !distributed))
     }
   }
+
+  private def etl(spark: SparkSession): Unit =
+    Seq(12500, 25000, 100000).foreach { n =>
+      migrate(spark, n, distributed = true) // warmup
+      val t = math.min(migrate(spark, n, distributed = true), migrate(spark, n, distributed = true))
+      println(f"[scaleprobe] etl n=$n%-7d $t%.2f s")
+    }
 
   /** Plans every registered query (no execution) and flags the shapes
     * that do not scale. Under AQE the pre-execution plan string hides

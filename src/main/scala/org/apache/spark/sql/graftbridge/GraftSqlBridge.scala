@@ -91,4 +91,9 @@ object GraftSqlBridge {
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
     }
   }
+
+  /** The name of the operator scope an RDD was made in (`WriteFiles`,
+    * `Exchange`, `WholeStageCodegen (3)`), if it has one. */
+  def scopeName(rdd: org.apache.spark.storage.RDDInfo): Option[String] =
+    rdd.scope.map(_.name)
 }

@@ -215,4 +215,17 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select(col("rt")).collect()
     assert(got.length === 1 && got(0).getLong(0) === 100L)
   }
+
+  test("limit(n) returns the first n rows of the unlimited result") {
+    val joined = AsOfJoin.asofJoin(leftDf, rightDf, "k", "rk", "t", "rt")
+      .select(col("id"), col("tag"))
+    val all = joined.collect().toSeq
+    // under spark.testing, Spark raises an internal error when a node that
+    // is neither a leaf nor blocking checks the limit in its produce loop
+    val prev = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "true")
+    try (1 to all.size).foreach { n =>
+      assert(joined.limit(n).collect().toSeq === all.take(n), s"n=$n")
+    } finally prev.fold(System.clearProperty("spark.testing"))(System.setProperty("spark.testing", _))
+  }
 }

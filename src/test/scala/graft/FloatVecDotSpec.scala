@@ -59,4 +59,21 @@ class IvfRecallSpec extends AnyFunSuite {
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.5, s"IVF recall $recall too low (exact=$exact ivf=$ivf)")
   }
+
+  test("register keeps the injected vec_dot, and adds it to a session without it") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions.FloatVecDot
+    val id = FunctionIdentifier("vec_dot")
+    val injected = spark.sessionState.functionRegistry.lookupFunctionBuilder(id)
+    assert(injected.isDefined)
+    FloatVecDot.register(spark)
+    FloatVecDot.register(spark)
+    assert(spark.sessionState.functionRegistry.lookupFunctionBuilder(id).get eq injected.get)
+
+    val bare = spark.newSession()
+    bare.sessionState.functionRegistry.dropFunction(id)
+    assert(!bare.sessionState.functionRegistry.functionExists(id))
+    FloatVecDot.register(bare)
+    assert(bare.sql("SELECT vec_dot(array(1f, 2f), array(3f, 4f))").head().getDouble(0) === 11.0)
+  }
 }

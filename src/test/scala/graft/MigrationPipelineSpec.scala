@@ -174,6 +174,51 @@ class MigrationPipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Markup and non-ASCII characters in an id (an attribute and, by N5,
+    * a text node) and in a store name (element text). Spark's CSV reader
+    * escapes a quote inside a quoted field with a backslash. */
+  private val markupCsv: String =
+    """current_customer_id,new_customer_id,new_source_id,new_store_id,new_store_name,mandatory_reference,delivery_day
+      |401419,"N&\"<Ö1",src1,S1,"A&B <C> \"D\" Ö",true,-1D
+      |401421,NEW3,src3,S3,Store Three,true,-1D
+      |""".stripMargin
+
+  /** Every file a distributed output holds is a part: `.xml` and a whole
+    * document with the `enfinity` root. */
+  private def assertWholeDocuments(dir: String): Unit = {
+    val files = new java.io.File(dir).listFiles().toSeq
+      .filterNot(f => f.getName.startsWith(".") || f.getName == "_SUCCESS")
+    assert(files.nonEmpty && files.forall(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".xml")), files.map(_.getName))
+    files.foreach { f =>
+      val factory = javax.xml.stream.XMLInputFactory.newInstance()
+      val in = Files.newInputStream(f.toPath)
+      val r = factory.createXMLStreamReader(in)
+      try {
+        while (r.hasNext && !r.isStartElement) r.next()
+        assert(r.getLocalName === "enfinity", f.getName)
+        while (r.hasNext) r.next() // throws unless the rest is well-formed
+      } finally { r.close(); in.close() }
+    }
+  }
+
+  test("markup and non-ASCII values round-trip through the delta XML, both modes") {
+    import spark.implicits._
+    for (scaleMode <- modes) {
+      val res = runFixture(markupCsv, scaleMode)
+      assert(res.customersFound === 2, s"scaleMode=$scaleMode")
+      if (scaleMode) assertWholeDocuments(res.outputXmlPath)
+      val out = CustomerXml.read(spark, res.outputXmlPath)
+      val c = out.filter(col("_id") === "N&\"<Ö1")
+      assert(c.count() === 1, s"scaleMode=$scaleMode")
+      val store = c.select(explode(col("custom-attributes.custom-attribute")).as("a"))
+        .filter(col("a._name") === "MEK_Store_Name").select(col("a._VALUE")).as[String].collect()
+      assert(store.toSeq === Seq("A&B <C> \"D\" Ö"), s"scaleMode=$scaleMode")
+      val text = c.select(explode(col("user")).as("u")).select(col("u.some-element")).as[String].collect()
+      assert(text.toSeq === Seq("N&\"<Ö1"), s"scaleMode=$scaleMode") // N5 over the markup id
+    }
+  }
+
   test("V6 summary counts: 7 found / 8 distinct csv ids") {
     assert(result.customersFound === 7)
     assert(result.csvDistinctIds === 8)

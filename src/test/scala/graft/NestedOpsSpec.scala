@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.NestedOps
@@ -95,5 +96,61 @@ class NestedOpsSpec extends AnyFunSuite {
     val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id")
       .select(col("tree._1")).collect().map(_.get(0)).toSet
     assert(out === Set("old1", null))
+  }
+
+  test("N5 rewrites map values but not map keys") {
+    val df = Seq(("old1", "new1", Map("old1" -> "old1", "k" -> "keep")))
+      .toDF("old_id", "new_id", "tree")
+    val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id")
+      .select(col("tree")).as[Map[String, String]].head()
+    assert(out === Map("old1" -> "new1", "k" -> "keep"))
+  }
+
+  test("N5 rewrites array<array<string>> leaves") {
+    val df = Seq(("old1", "new1", Seq(Seq("old1", "x"), Seq("y", "old1"))))
+      .toDF("old_id", "new_id", "tree")
+    val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id")
+      .select(col("tree")).as[Seq[Seq[String]]].head()
+    assert(out === Seq(Seq("new1", "x"), Seq("y", "new1")))
+  }
+
+  test("N5 null newCol keeps every leaf") {
+    val df = Seq(("old1", null.asInstanceOf[String], ("old1", Seq("old1"))))
+      .toDF("old_id", "new_id", "tree")
+    val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id")
+      .select(col("tree._1"), col("tree._2")).as[(String, Seq[String])].head()
+    assert(out === (("old1", Seq("old1"))))
+  }
+
+  test("N5 skipStructField applies inside arrays of structs") {
+    val df = Seq(("old1", "new1", Seq(("old1", "old1"), ("old1", "z"))))
+      .toDF("old_id", "new_id", "tree")
+      .withColumn("tree", transform(col("tree"), e =>
+        struct(e.getField("_1").as("_id"), e.getField("_2").as("_VALUE"))))
+    val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id",
+        skipStructField = f => f.startsWith("_") && f != "_VALUE")
+      .select(col("tree._id"), col("tree._VALUE")).as[(Seq[String], Seq[String])].head()
+    assert(out === ((Seq("old1", "old1"), Seq("new1", "z"))))
+  }
+
+  test("N5 result schema equals the input schema, non-nullable leaves included") {
+    val tree = StructType(Seq(
+      StructField("s", StringType, nullable = false),
+      StructField("a", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("m", MapType(StringType, StringType, valueContainsNull = false)),
+      StructField("n", StructType(Seq(
+        StructField("t", StringType),
+        StructField("i", IntegerType, nullable = false))), nullable = false)))
+    val schema = StructType(Seq(
+      StructField("old_id", StringType), StructField("new_id", StringType),
+      StructField("tree", tree, nullable = false)))
+    val rows = java.util.List.of(
+      Row("old1", "new1", Row("old1", Seq("old1", "x"), Map("k" -> "old1"), Row("old1", 1))))
+    val df = spark.createDataFrame(rows, schema)
+    val out = NestedOps.replaceNestedText(df, "tree", "old_id", "new_id")
+    assert(out.schema === df.schema)
+    assert(out.select(col("tree.s"), col("tree.a"), col("tree.m"), col("tree.n.t"))
+      .as[(String, Seq[String], Map[String, String], String)].head() ===
+      (("new1", Seq("new1", "x"), Map("k" -> "new1"), "new1")))
   }
 }
