@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,9 +104,4 @@ object BleuMatches {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `bleu_matches` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "bleu_matches", exprs => BleuMatches(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -150,9 +149,4 @@ object BpeEncode {
     }
     UTF8String.fromString(sb.toString)
   }
-
-  /** Register `bpe_encode` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "bpe_encode", exprs => BpeEncode(exprs.head, exprs(1)))
 }

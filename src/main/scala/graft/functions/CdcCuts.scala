@@ -3,7 +3,6 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,9 +99,4 @@ object CdcCuts {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(cuts.toArray)
   }
-
-  /** Register `cdc_cuts` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "cdc_cuts", exprs => CdcCuts(exprs.head, exprs(1), exprs(2)))
 }

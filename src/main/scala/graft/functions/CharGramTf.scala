@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -139,10 +138,4 @@ object CharGramTf {
     }
     toMapData(counts)
   }
-
-  /** Register `char_gram_tf` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "char_gram_tf",
-      exprs => CharGramTf(exprs.head, exprs(1), exprs(2), exprs(3)))
 }

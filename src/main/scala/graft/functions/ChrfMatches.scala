@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -121,9 +120,4 @@ object ChrfMatches {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `chrf_matches` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "chrf_matches", exprs => ChrfMatches(exprs.head, exprs(1)))
 }

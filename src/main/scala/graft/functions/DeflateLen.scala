@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.zip.Deflater
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,9 +59,4 @@ object DeflateLen {
     while (!d.finished()) total += d.deflate(buf)
     total
   }
-
-  /** Register `deflate_len` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "deflate_len", exprs => DeflateLen(exprs.head))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,9 +62,4 @@ object DistinctCount {
     }
     seen.size()
   }
-
-  /** Register `distinct_count` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "distinct_count", exprs => DistinctCount(exprs.head))
 }

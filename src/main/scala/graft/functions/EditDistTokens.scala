@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,9 +82,4 @@ object EditDistTokens {
     }
     prev(ys.length)
   }
-
-  /** Register `edit_dist_tokens` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "edit_dist_tokens", exprs => EditDistTokens(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -69,12 +68,4 @@ case class FloatVecDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatVecDot =
     copy(left = newLeft, right = newRight)
-}
-
-object FloatVecDot {
-  /** Register `vec_dot` in the session's function registry; queries then
-    * call it via `expr("vec_dot(a, b)")`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "vec_dot", exprs => FloatVecDot(exprs.head, exprs(1)))
 }

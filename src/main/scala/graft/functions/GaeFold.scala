@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
@@ -108,9 +107,4 @@ object GaeFold {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `gae_fold` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "gae_fold", exprs => GaeFold(exprs.head, exprs(1), exprs(2)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,9 +69,4 @@ object HexHamming {
     }
     acc
   }
-
-  /** Register `hex_hamming` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "hex_hamming", exprs => HexHamming(exprs.head, exprs(1)))
 }

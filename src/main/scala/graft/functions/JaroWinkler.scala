@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,14 +56,6 @@ case class JaroWinkler(left: Expression, right: Expression)
 }
 
 object JaroWinkler {
-
-  /** Register `jaro_winkler` in the session's function registry (the
-    * [[FloatVecDot.register]] convention); queries then call it via
-    * `expr("jaro_winkler(a, b)")`. GraftExtensions also injects it for
-    * pure-SQL sessions. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "jaro_winkler", exprs => JaroWinkler(exprs.head, exprs(1)))
 
   /** Static + allocation-light so JIT inlines it into the generated
     * stage. Semantics pinned to DuckDB's jaro_winkler_similarity. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -80,9 +79,4 @@ object LcsTokens {
     }
     prev(ys.length)
   }
-
-  /** Register `lcs_tokens` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "lcs_tokens", exprs => LcsTokens(exprs.head, exprs(1)))
 }

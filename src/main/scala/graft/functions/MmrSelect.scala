@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -159,10 +158,4 @@ object MmrSelect {
     }
     new GenericArrayData(out.toArray)
   }
-
-  /** Register `mmr_select` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "mmr_select",
-      exprs => MmrSelect(exprs.head, exprs(1), exprs(2), exprs(3)))
 }

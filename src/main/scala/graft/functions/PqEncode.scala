@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -216,11 +215,4 @@ case class PqEncode(children: Seq[Expression]) extends Expression {
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): PqEncode = copy(children = newChildren)
-}
-
-object PqEncode {
-  /** Register `pq_encode` in the session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "pq_encode", exprs => PqEncode(exprs))
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -84,11 +83,6 @@ object TokenBucketTf {
     }
     CharGramTf.toMapData(counts)
   }
-
-  /** Register `token_bucket_tf` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "token_bucket_tf", exprs => TokenBucketTf(exprs.head, exprs(1)))
 }
 
 /** Dense sibling of [[TokenBucketTf]]: `token_tf_vec(toks, dims)`
@@ -159,9 +153,4 @@ object TokenTfVec {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(vec)
   }
-
-  /** Register `token_tf_vec` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "token_tf_vec", exprs => TokenTfVec(exprs.head, exprs(1)))
 }

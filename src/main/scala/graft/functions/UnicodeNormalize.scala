@@ -2,7 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,9 +73,8 @@ object UnicodeNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, f))
   }
 
-  /** The ONE builder both registration paths share (function registry
-    * and [[graft.plans.GraftExtensions]]) — the form argument must be a
-    * string literal, checked here so the two paths cannot drift. */
+  /** The SQL builder behind `unicode_normalize(str, form)` in
+    * [[Kernels]]: the form argument must be a string literal. */
   def builder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, "unicode_normalize(str, form)")
     val form = exprs(1) match {
@@ -86,9 +84,4 @@ object UnicodeNormalize {
     }
     UnicodeNormalize(exprs.head, form)
   }
-
-  /** Register `unicode_normalize(str, 'NFKC')` in the function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "unicode_normalize", builder)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -185,9 +184,4 @@ object UnigramEncode {
     }
     UTF8String.fromString(sb.toString)
   }
-
-  /** Register `unigram_encode` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "unigram_encode", exprs => UnigramEncode(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -158,9 +157,4 @@ object WordPieceEncode {
     }
     UTF8String.fromString(sb.toString)
   }
-
-  /** Register `wordpiece_encode` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark,
-      "wordpiece_encode", exprs => WordPieceEncode(exprs.head, exprs(1)))
 }

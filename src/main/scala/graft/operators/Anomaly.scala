@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * input row comes back — the output is exactly the input plus
   * `(z, is_anomaly)`.
   *
-  * `broadcastMoments = false` drops the broadcast hint for very high
-  * key cardinality (a billion-key moments side should shuffle-join,
-  * not collect to the driver); the default fits the common case where
-  * moments are keys-sized and tiny.
+  * Every per-key statistics side is broadcast: it is keys-sized, and a
+  * key space too large to ship to each executor is past what these
+  * operators serve (a billion-key side should shuffle-join, which means
+  * dropping the hint here, not a per-call switch).
   */
 object Anomaly {
 
@@ -43,23 +43,21 @@ object Anomaly {
     * row (cold start), sd = 0, or a single observation get z = null and
     * flag nothing; every input row comes back. */
   def scoreAgainstMoments(obs: DataFrame, mom: DataFrame, keyCol: String,
-      valueCol: String, threshold: Double,
-      broadcastMoments: Boolean = true): DataFrame = {
+      valueCol: String, threshold: Double): DataFrame = {
     require(threshold > 0, s"threshold must be positive, got $threshold")
     val m = mom.select(col(keyCol).as("__mk"), col("mean").as("__mean"),
       col("sd").as("__sd"))
-    val mSide = if (broadcastMoments) broadcast(m) else m
     val z = round((col(valueCol) - col("__mean")) / col("__sd"), 6)
-    obs.join(mSide, col(keyCol) <=> col("__mk"), "left")
+    obs.join(broadcast(m), col(keyCol) <=> col("__mk"), "left")
       .withColumn("z", when(col("__sd") > 0, z))
       .withColumn("is_anomaly", coalesce(abs(col("z")) >= threshold, lit(false)))
       .drop("__mk", "__mean", "__sd")
   }
 
   def zscores(obs: DataFrame, keyCol: String, valueCol: String,
-      threshold: Double, broadcastMoments: Boolean = true): DataFrame =
+      threshold: Double): DataFrame =
     scoreAgainstMoments(obs, moments(obs, keyCol, valueCol), keyCol,
-      valueCol, threshold, broadcastMoments)
+      valueCol, threshold)
 
   /** Tukey-fence outlier flags — the ROBUST complement to [[zscores]]:
     * a value is anomalous when it falls outside `[q1 − k·IQR,
@@ -71,19 +69,16 @@ object Anomaly {
     * per-key aggregate, broadcast join back, map-side flag. A zero-IQR
     * key (at least half the mass on one value) flags anything off that
     * value — the fences collapse to the quartiles, which is the
-    * standard behavior. Null values never flag. `broadcastFences =
-    * false` for key spaces too large to broadcast — the same escape
-    * hatch [[scoreAgainstMoments]] exposes as `broadcastMoments`. */
+    * standard behavior. Null values never flag. */
   def tukeyFences(obs: DataFrame, keyCol: String, valueCol: String,
-      k: Double = 1.5, broadcastFences: Boolean = true): DataFrame = {
+      k: Double = 1.5): DataFrame = {
     require(k > 0, s"fence multiplier must be positive, got $k")
     val q = obs.groupBy(col(keyCol).as("__tk"))
       .agg(round(expr(s"percentile(`$valueCol`, 0.25)"), 6).as("__q1"),
         round(expr(s"percentile(`$valueCol`, 0.75)"), 6).as("__q3"))
-    val qSide = if (broadcastFences) broadcast(q) else q
     val lo = round(col("__q1") - lit(k) * (col("__q3") - col("__q1")), 6)
     val hi = round(col("__q3") + lit(k) * (col("__q3") - col("__q1")), 6)
-    obs.join(qSide, col(keyCol) <=> col("__tk"), "left")
+    obs.join(broadcast(q), col(keyCol) <=> col("__tk"), "left")
       .withColumn("is_anomaly",
         coalesce(col(valueCol) < lo || col(valueCol) > hi, lit(false)))
       .drop("__tk", "__q1", "__q3")
@@ -101,25 +96,22 @@ object Anomaly {
     * key (at least half the mass on one value) has no defined scale:
     * off-median values flag with a NULL rz (the verdict survives, the
     * score is honestly undefined), on-median values pass. Null values
-    * never flag. Same `broadcast*` escape hatch as the other two.
-    * Returns the input plus `(rz, is_anomaly)`. */
+    * never flag. Returns the input plus `(rz, is_anomaly)`. */
   def robustZ(obs: DataFrame, keyCol: String, valueCol: String,
-      threshold: Double = 3.5, broadcastStats: Boolean = true): DataFrame = {
+      threshold: Double = 3.5): DataFrame = {
     require(threshold > 0, s"threshold must be positive, got $threshold")
     val med = obs.groupBy(col(keyCol).as("__rk"))
       .agg(round(expr(s"percentile(`$valueCol`, 0.5)"), 6).as("__med"))
-    val medSide = if (broadcastStats) broadcast(med) else med
-    val mad = obs.join(medSide, col(keyCol) <=> col("__rk"))
+    val mad = obs.join(broadcast(med), col(keyCol) <=> col("__rk"))
       .groupBy(col("__rk"))
       .agg(round(expr(s"percentile(abs(`$valueCol` - __med), 0.5)"), 6)
         .as("__mad"))
     val stats = med.join(mad.withColumnRenamed("__rk", "__rk2"),
         col("__rk") <=> col("__rk2"))
       .drop("__rk2")
-    val statsSide = if (broadcastStats) broadcast(stats) else stats
     val rz = round(lit(0.6745) * (col(valueCol) - col("__med")) /
       col("__mad"), 6)
-    obs.join(statsSide, col(keyCol) <=> col("__rk"), "left")
+    obs.join(broadcast(stats), col(keyCol) <=> col("__rk"), "left")
       .withColumn("rz",
         when(col("__mad") > 0, rz))
       .withColumn("is_anomaly",

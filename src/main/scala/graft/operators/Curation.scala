@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation — the composition a training-data pipeline
@@ -25,24 +25,51 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
+  /** The quality gate over a token array — identical expressions (incl.
+    * 4-dp rounding) to the oracle-checked q_x2 metrics. */
+  private def qualityGate(toks: Column, minTokens: Int): Column = {
+    val nTok = size(toks)
+    val avgLen = round(length(array_join(toks, "")).cast("double") / nTok, 4)
+    val stopRatio = round(
+      TextAnalysis.hitCount(toks, TextAnalysis.langStopwords.head._2)
+        .cast("double") / nTok, 4)
+    nTok >= minTokens && avgLen >= 2.0 && avgLen <= 10.0 && stopRatio >= 0.02
+  }
+
+  /** The complete (stage, stage_name, source, docs) grid over `stages`,
+    * after the raw stage 0: sources × stages cross the (bounded,
+    * broadcast) stage table, zero-count cells included. A null source
+    * groups under the literal `'<null>'`. */
+  private def funnelGrid(docs: DataFrame, sourceCol: String, idCol: String,
+      stages: Seq[(String, DataFrame)]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val src = docs.select(col(idCol),
+      coalesce(col(sourceCol), lit("<null>")).as("source"))
+    val named = ("raw" -> src) +: stages
+    val counts = named.zipWithIndex.map { case ((_, ids), stage) =>
+      ids.select(col(idCol)).join(src, Seq(idCol))
+        .groupBy(col("source")).agg(count(lit(1)).as("n"))
+        .select(lit(stage).as("stage"), col("source"), col("n"))
+    }.reduce(_ unionAll _)
+    val stageTable = named.zipWithIndex.map { case ((name, _), stage) =>
+      (stage, name) }.toDF("stage", "stage_name")
+    src.select(col("source")).distinct()
+      .crossJoin(broadcast(stageTable))
+      .join(counts, Seq("source", "stage"), "left")
+      .select(col("stage"), col("stage_name"), col("source"),
+        coalesce(col("n"), lit(0L)).as("docs"))
+  }
+
   /** The shared stage chain: (quality survivors, exact-dedup survivors,
     * near-dup survivors) — [[curate]] labels the last; [[curationFunnel]]
     * counts all three. */
   private def stageFrames(docs: DataFrame, textCol: String, idCol: String,
       minTokens: Int): (DataFrame, DataFrame, DataFrame) = {
-    // 1. quality gate — identical expressions (incl. 4-dp rounding) to the
-    // oracle-checked q_x2 metrics
-    val toksed = docs.select(col(idCol), col(textCol),
-      TextAnalysis.tokens(col(textCol)).as("toks"))
-    val nTok = size(col("toks"))
-    val avgLen = round(
-      length(array_join(col("toks"), "")).cast("double") / nTok, 4)
-    val stopRatio = round(
-      TextAnalysis.hitCount(col("toks"), TextAnalysis.langStopwords.head._2)
-        .cast("double") / nTok, 4)
-    val quality = toksed
-      .filter(nTok >= minTokens && avgLen >= 2.0 && avgLen <= 10.0 &&
-        stopRatio >= 0.02)
+    // 1. quality gate
+    val quality = docs.select(col(idCol), col(textCol),
+        TextAnalysis.tokens(col(textCol)).as("toks"))
+      .filter(qualityGate(col("toks"), minTokens))
       .select(col(idCol), col(textCol))
 
     // 2. exact dedup: min-id keeper per content hash
@@ -95,26 +122,10 @@ object Curation {
   def curationFunnel(docs: DataFrame, sourceCol: String = "source",
       textCol: String = "text", idCol: String = "doc_id",
       minTokens: Int = 20): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val (quality, exact, survivors) =
       stageFrames(docs, textCol, idCol, minTokens)
-    val src = docs.select(col(idCol),
-      coalesce(col(sourceCol), lit("<null>")).as("source"))
-    def perSource(stage: Int, ids: DataFrame): DataFrame =
-      ids.select(col(idCol)).join(src, Seq(idCol))
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .select(lit(stage).as("stage"), col("source"), col("n"))
-    val counts = Seq(perSource(0, src), perSource(1, quality),
-      perSource(2, exact), perSource(3, survivors))
-      .reduce(_ unionAll _)
-    val stages = Seq((0, "raw"), (1, "quality"), (2, "exact_dedup"),
-      (3, "near_dup")).toDF("stage", "stage_name")
-    src.select(col("source")).distinct()
-      .crossJoin(broadcast(stages))
-      .join(counts, Seq("source", "stage"), "left")
-      .select(col("stage"), col("stage_name"), col("source"),
-        coalesce(col("n"), lit(0L)).as("docs"))
+    funnelGrid(docs, sourceCol, idCol, Seq("quality" -> quality,
+      "exact_dedup" -> exact, "near_dup" -> survivors))
   }
 
   /** [[curationFunnel]] + the web-graph host-rank gate as stage 4 — the
@@ -134,8 +145,6 @@ object Curation {
       sourceCol: String = "source", textCol: String = "text",
       idCol: String = "doc_id", minTokens: Int = 20,
       prIters: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val (quality, exact, survivors) =
       stageFrames(docs, textCol, idCol, minTokens)
     val hr = TextAnalysis.hostRankFeature(urls, urlCol, links, linkUrlCol,
@@ -143,23 +152,9 @@ object Curation {
     val hostGated = survivors.select(col(idCol))
       .join(hr.select(col(idCol), col("host_rank")), Seq(idCol), "left")
       .filter(col("host_rank").isNull || col("host_rank") >= minHostRank)
-    val src = docs.select(col(idCol),
-      coalesce(col(sourceCol), lit("<null>")).as("source"))
-    def perSource(stage: Int, ids: DataFrame): DataFrame =
-      ids.select(col(idCol)).join(src, Seq(idCol))
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .select(lit(stage).as("stage"), col("source"), col("n"))
-    val counts = Seq(perSource(0, src), perSource(1, quality),
-      perSource(2, exact), perSource(3, survivors),
-      perSource(4, hostGated))
-      .reduce(_ unionAll _)
-    val stages = Seq((0, "raw"), (1, "quality"), (2, "exact_dedup"),
-      (3, "near_dup"), (4, "host_rank")).toDF("stage", "stage_name")
-    src.select(col("source")).distinct()
-      .crossJoin(broadcast(stages))
-      .join(counts, Seq("source", "stage"), "left")
-      .select(col("stage"), col("stage_name"), col("source"),
-        coalesce(col("n"), lit(0L)).as("docs"))
+    funnelGrid(docs, sourceCol, idCol, Seq("quality" -> quality,
+      "exact_dedup" -> exact, "near_dup" -> survivors,
+      "host_rank" -> hostGated))
   }
 
   /** Joint text+embedding curation: the cross-modal composition a corpus
@@ -174,16 +169,8 @@ object Curation {
       textCol: String = "text", idCol: String = "doc_id",
       minTokens: Int = 20, numPlanes: Int = 4, minScore: Double = 0.35,
       seed: String = "exp1", trainPct: Int = 90, valPct: Int = 5): DataFrame = {
-    val toksed = docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
-    val nTok = size(col("toks"))
-    val avgLen = round(
-      length(array_join(col("toks"), "")).cast("double") / nTok, 4)
-    val stopRatio = round(
-      TextAnalysis.hitCount(col("toks"), TextAnalysis.langStopwords.head._2)
-        .cast("double") / nTok, 4)
-    val quality = toksed
-      .filter(nTok >= minTokens && avgLen >= 2.0 && avgLen <= 10.0 &&
-        stopRatio >= 0.02)
+    val quality = docs.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
+      .filter(qualityGate(col("toks"), minTokens))
       .select(col(idCol))
     val pairs = Similarity.nearDupByCosine(emb, numPlanes, minScore)
     val dropIds = pairs

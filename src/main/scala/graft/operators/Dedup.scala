@@ -2,7 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.{HexHamming, MinHashBands, SimHash64}
 
 /** Deduplication operators for LLM-data-pipeline curation (exact,
   * n-gram-Jaccard, MinHash-LSH, SimHash), designed scale-first:
@@ -406,7 +410,6 @@ object Dedup {
       shingleK: Int, numHashes: Int, rowsPerBand: Int): DataFrame = {
     require(numHashes % rowsPerBand == 0,
       s"rowsPerBand=$rowsPerBand must divide numHashes=$numHashes")
-    graft.functions.MinHashBands.register(docs.sparkSession)
     // filter on the cheap token count, never on the derived shingle array
     // (a pushed-down size(shingles) predicate would inline and re-run the
     // shingle HOF); the kernel itself is consumed exactly once by the
@@ -414,9 +417,9 @@ object Dedup {
     spread(docs.select(col(idCol).as("sid"),
         TextAnalysis.tokens(col(textCol)).as("toks")))
       .filter(size(col("toks")) >= shingleK)
-      .select(col("sid"), posexplode(call_function("minhash_bands",
-        TextAnalysis.shingles(col("toks"), shingleK),
-        lit(numHashes), lit(rowsPerBand))).as(Seq("band", "bh")))
+      .select(col("sid"), posexplode(column(MinHashBands(
+        expression(TextAnalysis.shingles(col("toks"), shingleK)),
+        Literal(numHashes), Literal(rowsPerBand)))).as(Seq("band", "bh")))
   }
 
   /** Incremental-corpus dedup: classify every INCOMING document against
@@ -1576,9 +1579,8 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("sh_a"), col("sh_b")).distinct()
     // codegen'd single-pass kernel (graft.functions.HexHamming) — the
     // composed 4 × conv/substr/xor/bit_count form walks the strings 4×
-    graft.functions.HexHamming.register(sig.sparkSession)
     cand.select(col("a_id"), col("b_id"),
-        call_function("hex_hamming", col("sh_a"), col("sh_b")).as("hamming"))
+        column(HexHamming(expression(col("sh_a")), expression(col("sh_b")))).as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
 
@@ -1589,10 +1591,9 @@ object Dedup {
     * oracle-documented relational reference); empty docs are filtered on
     * the cheap token count to match its doc set. */
   def simhashSignatureMapOnly(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.SimHash64.register(df.sparkSession)
     spread(df.select(col(idCol).as("sid"), TextAnalysis.tokens(col(textCol)).as("toks")))
       .filter(size(col("toks")) > 0)
-      .select(col("sid"), call_function("simhash64", col("toks")).as("simhash"))
+      .select(col("sid"), column(SimHash64(expression(col("toks")))).as("simhash"))
   }
 
   /** SimHash signature (16 hex chars = 64 bits): per token, md5 → 16 hex

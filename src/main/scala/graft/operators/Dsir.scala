@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 
-import graft.functions.TopKAggregator
+import graft.functions.{TokenBucketTf, TopKAggregator}
 
 /** Data Selection via Importance Resampling (Xie et al. 2023, "Data
   * Selection for Language Models via Importance Resampling" — the DSIR
@@ -45,12 +47,11 @@ object Dsir {
     // map-only TF: one explode of the ≤ buckets kernel-map entries per
     // doc replaces the per-token explode + md5 + keyed counting
     // aggregation (guide §2.4 — same move as linearQualityScore)
-    graft.functions.TokenBucketTf.register(docs.sparkSession)
     Par.spread(docs.select(col(idCol), isTarget.as("__tgt"),
         TextAnalysis.tokens(lower(col(textCol))).as("__toks")))
       .select(col(idCol), col("__tgt"),
-        explode(call_function("token_bucket_tf", col("__toks"),
-          lit(buckets))))
+        explode(column(TokenBucketTf(expression(col("__toks")),
+          Literal(buckets)))))
       .select(col(idCol), col("__tgt"), col("key").as("b"),
         col("value").as("__tf"))
   }

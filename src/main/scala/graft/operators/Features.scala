@@ -22,14 +22,12 @@ object Features {
     * and flagging that beats inventing a midpoint. Null keys form their
     * own cohort (null-safe join); null values pass through as null.
     * Returns the input plus `<valueCol>_scaled`. */
-  def minMaxScale(df: DataFrame, keyCol: String, valueCol: String,
-      broadcastStats: Boolean = true): DataFrame = {
+  def minMaxScale(df: DataFrame, keyCol: String, valueCol: String): DataFrame = {
     val stats = df.groupBy(col(keyCol))
       .agg(round(min(col(valueCol)), 6).as("__lo"),
         round(max(col(valueCol)), 6).as("__hi"))
       .withColumnRenamed(keyCol, "__sk")
-    val sSide = if (broadcastStats) broadcast(stats) else stats
-    df.join(sSide, col(keyCol) <=> col("__sk"), "left")
+    df.join(broadcast(stats), col(keyCol) <=> col("__sk"), "left")
       .withColumn(s"${valueCol}_scaled",
         when(col("__hi") > col("__lo"),
           round((col(valueCol) - col("__lo")) / (col("__hi") - col("__lo")), 6)))

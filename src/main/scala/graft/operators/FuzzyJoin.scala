@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.JaroWinkler
 
 /** Fuzzy (edit-distance) self-join — entity resolution over identifier
   * strings: find every pair of rows whose key strings are within
@@ -72,7 +75,6 @@ object FuzzyJoin {
       minSimMicros: Long): DataFrame = {
     require(minSimMicros >= 0 && minSimMicros <= 1000000L,
       s"minSimMicros in [0, 1e6], got $minSimMicros")
-    graft.functions.JaroWinkler.register(df.sparkSession)
     val v = variantRelation(df, idCol, strCol, "sid", "s")
     val names = df.select(col(idCol).as("nid"), col(strCol).as("nname"))
     v.select(col("sid").as("a_id"), col("v"))
@@ -83,7 +85,8 @@ object FuzzyJoin {
         Seq("a_id"))
       .join(names.select(col("nid").as("b_id"), col("nname").as("b_name")),
         Seq("b_id"))
-      .withColumn("jw", round(expr("jaro_winkler(a_name, b_name)"), 6))
+      .withColumn("jw", round(column(JaroWinkler(expression(col("a_name")),
+        expression(col("b_name")))), 6))
       .filter(round(col("jw") * 1e6).cast("long") >= minSimMicros)
       .select(col("a_id"), col("b_id"), col("jw"))
   }
@@ -91,18 +94,14 @@ object FuzzyJoin {
   /** Two-table variant — resolve each left row against a reference table
     * (dirty feed × canonical dimension): every (left_id, right_id) pair
     * within distance 1, exact matches included. Same candidate shape.
-    * `broadcastRight = true` broadcasts the right variant relation —
-    * set it when the right side is a dimension small enough to ship
-    * (variant fan-out is O(len) rows per name, so a table can exceed
-    * the auto-broadcast threshold well before its base size suggests). */
+    * The planner picks the join strategy; the right variant relation
+    * fans out O(len) rows per name, so it can exceed the auto-broadcast
+    * threshold well before the right table's base size suggests. */
   def join(left: DataFrame, leftId: String, leftStr: String,
-      right: DataFrame, rightId: String, rightStr: String,
-      broadcastRight: Boolean = false): DataFrame = {
+      right: DataFrame, rightId: String, rightStr: String): DataFrame = {
     val lv = variantRelation(left, leftId, leftStr, "left_id", "ls")
-    val rv0 = variantRelation(right, rightId, rightStr, "right_id", "rs")
-    val rv = if (broadcastRight) broadcast(rv0) else rv0
-    val rnames0 = right.select(col(rightId).as("right_id"), col(rightStr).as("rs"))
-    val rnames = if (broadcastRight) broadcast(rnames0) else rnames0
+    val rv = variantRelation(right, rightId, rightStr, "right_id", "rs")
+    val rnames = right.select(col(rightId).as("right_id"), col(rightStr).as("rs"))
     lv.select(col("left_id"), col("v"))
       .join(rv.select(col("right_id"), col("v")), Seq("v"))
       .select(col("left_id"), col("right_id")).distinct()

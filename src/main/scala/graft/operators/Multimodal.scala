@@ -1093,11 +1093,10 @@ object Multimodal {
     val (verdicts, queries, cands) =
       pairAlignmentCore(pairs, idCol, srcCol, imgCol, txtCol, tauMicros,
         minePred)
-    val sp = pairs.sparkSession
     val scored = Par.spread(cands).crossJoin(broadcast(queries))
       .filter(col("__cid") =!= col("__qid"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
-        round(round(Similarity.nativeDot(sp, col("__qv"), col("__cv"))
+        round(round(Similarity.nativeDot(col("__qv"), col("__cv"))
           / (col("__qn") * col("__cn")), 6) * 1e6).cast("long")
           .cast("double").as("score"))
     pairAlignmentTail(verdicts, scored, idCol, srcCol)
@@ -1124,14 +1123,13 @@ object Multimodal {
     val (verdicts, queries, cands) =
       pairAlignmentCore(pairs, idCol, srcCol, imgCol, txtCol, tauMicros,
         lit(true))
-    val sp = pairs.sparkSession
     val scored = candidates
       .select(col("query_id").as("__qid"), col("cand_id").as("__cid"))
       .filter(col("__cid") =!= col("__qid"))
       .join(queries, Seq("__qid"))
       .join(cands, Seq("__cid"))
       .select(col("__qid").as("query_id"), col("__cid").as("neighbor_id"),
-        round(round(Similarity.nativeDot(sp, col("__qv"), col("__cv"))
+        round(round(Similarity.nativeDot(col("__qv"), col("__cv"))
           / (col("__qn") * col("__cn")), 6) * 1e6).cast("long")
           .cast("double").as("score"))
     pairAlignmentTail(verdicts, scored, idCol, srcCol)
@@ -1145,16 +1143,15 @@ object Multimodal {
       : (DataFrame, DataFrame, DataFrame) = {
     require(tauMicros >= -1000000L && tauMicros <= 1000000L,
       s"tau is micros of cosine in [-1e6, 1e6], got $tauMicros")
-    val sp = pairs.sparkSession
     def nrm(c: org.apache.spark.sql.Column) =
-      sqrt(Similarity.nativeDot(sp, c, c))
+      sqrt(Similarity.nativeDot(c, c))
     val base = pairs.select(col(idCol), col(srcCol),
         col(imgCol).as("__iv"), col(txtCol).as("__tv"), minePred.as("__mine"))
       .withColumn("__in", when(col("__iv").isNotNull, nrm(col("__iv"))))
       .withColumn("__tn", when(col("__tv").isNotNull, nrm(col("__tv"))))
     val verdicts = base.withColumn("cos_micros",
         when(col("__in") > 0 && col("__tn") > 0,
-          round(round(Similarity.nativeDot(sp, col("__iv"), col("__tv"))
+          round(round(Similarity.nativeDot(col("__iv"), col("__tv"))
             / (col("__in") * col("__tn")), 6) * 1e6).cast("long")))
       .withColumn("aligned",
         coalesce(col("cos_micros") >= tauMicros, lit(false)))
@@ -1204,9 +1201,8 @@ object Multimodal {
     require(numCentroids >= 1, s"numCentroids must be >= 1, got $numCentroids")
     require(nProbe >= 1 && nProbe <= numCentroids,
       s"nProbe must be in [1, numCentroids], got $nProbe")
-    val sp = pairs.sparkSession
     def nrm(c: org.apache.spark.sql.Column) =
-      sqrt(Similarity.nativeDot(sp, c, c))
+      sqrt(Similarity.nativeDot(c, c))
     val txts = pairs.filter(col(txtCol).isNotNull)
       .select(col(idCol).as("vec_id"),
         col(txtCol).cast("array<float>").as("embedding"))
@@ -1223,7 +1219,7 @@ object Multimodal {
       .withColumn("qn", nrm(col("qv")))
       .crossJoin(centsN)
       .select(col("query_id"), col("centroid_id"),
-        round(Similarity.nativeDot(sp, col("qv"), col("cv"))
+        round(Similarity.nativeDot(col("qv"), col("cv"))
           / (col("qn") * col("cn")), 6).as("cscore"))
     Similarity.perQueryTopK(probeScores, nProbe,
         idName = "centroid_id", scoreName = "cscore")
@@ -1275,9 +1271,8 @@ object Multimodal {
       maxChunksPerDoc: Int = 4096): DataFrame = {
     require(maxChunksPerDoc >= 1,
       s"maxChunksPerDoc must be positive, got $maxChunksPerDoc")
-    val sp = images.sparkSession
     def nrm(c: org.apache.spark.sql.Column) =
-      sqrt(Similarity.nativeDot(sp, c, c))
+      sqrt(Similarity.nativeDot(c, c))
     // ordinal guard: the packed argmax shifts by 2^32, so a chunk id
     // outside [0, 2^32) would silently corrupt best-chunk selection —
     // raise in-plan on the value path (mirrors the maxChunksPerDoc cap)
@@ -1304,7 +1299,7 @@ object Multimodal {
     val ord = col("__cm") * lit(4294967296L) - col("__cid").cast("long")
     val best = im.filter(col("__in") > 0).join(ch, Seq("__d"))
       .select(col("__d"), col("__iid"), col("__cid"),
-        round(round(Similarity.nativeDot(sp, col("__iv"), col("__cv"))
+        round(round(Similarity.nativeDot(col("__iv"), col("__cv"))
           / (col("__in") * col("__cn")), 6) * 1e6).cast("long").as("__cm"))
       .groupBy(col("__d"), col("__iid"))
       .agg(max_by(col("__cid"), ord).as("chunk_id"),

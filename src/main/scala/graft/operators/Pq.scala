@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.PqEncode
 
 /** Product quantization (PQ) for approximate inner-product search over
   * embedding columns — the memory-side counterpart to [[Similarity]]'s
@@ -32,9 +36,6 @@ object Pq {
   private def subVec(vec: Column, s: Int, subDim: Int): Column =
     slice(vec, s * subDim + 1, subDim)
 
-  private def nativeDot(df: DataFrame, a: Column, b: Column): Column =
-    Similarity.nativeDot(df.sparkSession, a, b)
-
   /** Subspace assignment score with the zero-norm contract: a zero-norm
     * slice (an all-zero subvector — plausible in real sparse embeddings)
     * or a zero-norm codebook entry has no defined cosine, and the raw
@@ -46,10 +47,10 @@ object Pq {
     * centroid (code 0 when every entry is unscorable). The corpus never
     * exercises this branch at the registered parameters, so the oracles
     * are unaffected; PqSpec pins the zero-slice behavior. */
-  private def subScore(df: DataFrame, sv: Column, cv: Column,
+  private def subScore(sv: Column, cv: Column,
       svn: Column, cn: Column): Column =
     when(svn > 0 && cn > 0,
-      round(nativeDot(df, sv, cv) / (svn * cn), 6)).otherwise(lit(-2.0))
+      round(Similarity.nativeDot(sv, cv) / (svn * cn), 6)).otherwise(lit(-2.0))
 
   /** L2 assignment score: argmin |x−c|² = argmax (2·dot(x,c) − |c|²)
     * (|x|² is constant per slice, so it drops out of the argmax). This is
@@ -63,8 +64,8 @@ object Pq {
     * break to the lowest centroid id via the same packed-long ord (scores
     * stay |…| ≤ ~10³ for unit-ish embeddings, far inside the 2^31/1e6
     * packing budget). */
-  private def subScoreL2(df: DataFrame, sv: Column, cv: Column, cn2: Column): Column =
-    round(lit(2.0) * nativeDot(df, sv, cv) - cn2, 6)
+  private def subScoreL2(sv: Column, cv: Column, cn2: Column): Column =
+    round(lit(2.0) * Similarity.nativeDot(sv, cv) - cn2, 6)
 
   /** Train per-subspace codebooks: `(sub_id: int, centroid_id: long,
     * cv: array<float>)`.
@@ -117,14 +118,14 @@ object Pq {
             .select(col("vec_id"), col("sub_id"), col("code").as("centroid_id"))
         else {
           val cb = broadcast(cents.select(col("sub_id"), col("centroid_id"), col("cv"),
-            sqrt(nativeDot(cents, col("cv"), col("cv"))).as("cn"),
-            nativeDot(cents, col("cv"), col("cv")).as("cn2")))
+            sqrt(Similarity.nativeDot(col("cv"), col("cv"))).as("cn"),
+            Similarity.nativeDot(col("cv"), col("cv")).as("cn2")))
           val ex = exploded
             .select(col("vec_id"), col("sub_id"), col("sv"),
-              sqrt(nativeDot(emb, col("sv"), col("sv"))).as("svn"))
+              sqrt(Similarity.nativeDot(col("sv"), col("sv"))).as("svn"))
           val score =
-            if (metric == "l2") subScoreL2(emb, col("sv"), col("cv"), col("cn2"))
-            else subScore(emb, col("sv"), col("cv"), col("svn"), col("cn"))
+            if (metric == "l2") subScoreL2(col("sv"), col("cv"), col("cn2"))
+            else subScore(col("sv"), col("cv"), col("svn"), col("cn"))
           ex.join(cb, Seq("sub_id"))
             .select(col("vec_id"), col("sub_id"), col("centroid_id"),
               score.as("score"))
@@ -174,13 +175,13 @@ object Pq {
       .select(col(idCol).as("vec_id"), col(vecCol)))
       .select(col("vec_id"), posexplode(slices).as(Seq("sub_id", "sv")))
       .select(col("vec_id"), col("sub_id"), col("sv"),
-        sqrt(nativeDot(emb, col("sv"), col("sv"))).as("svn"))
+        sqrt(Similarity.nativeDot(col("sv"), col("sv"))).as("svn"))
     val cb = broadcast(codebooks.select(col("sub_id"), col("centroid_id"), col("cv"),
-      sqrt(nativeDot(codebooks, col("cv"), col("cv"))).as("cn"),
-      nativeDot(codebooks, col("cv"), col("cv")).as("cn2")))
+      sqrt(Similarity.nativeDot(col("cv"), col("cv"))).as("cn"),
+      Similarity.nativeDot(col("cv"), col("cv")).as("cn2")))
     val score =
-      if (metric == "l2") subScoreL2(emb, col("sv"), col("cv"), col("cn2"))
-      else subScore(emb, col("sv"), col("cv"), col("svn"), col("cn"))
+      if (metric == "l2") subScoreL2(col("sv"), col("cv"), col("cn2"))
+      else subScore(col("sv"), col("cv"), col("svn"), col("cn"))
     val ord = round(col("score") * 1e6).cast("long") * lit(4294967296L) -
       col("centroid_id").cast("long")
     exploded.join(cb, Seq("sub_id"))
@@ -228,10 +229,9 @@ object Pq {
           s"${cv.length} dims, expected subDim=$subDim")
       cv.copyToArray(cvs, e * subDim)
     }
-    graft.functions.PqEncode.register(emb.sparkSession)
-    val kernel = call_function("pq_encode", col(vecCol),
-      typedLit(ids), typedLit(cvs), lit(m), lit(k), lit(subDim),
-      lit(metric == "cosine"))
+    val kernel = column(PqEncode(Seq(expression(col(vecCol)),
+      expression(typedLit(ids)), expression(typedLit(cvs)), Literal(m),
+      Literal(k), Literal(subDim), Literal(metric == "cosine"))))
     // null-vector rows are excluded, matching encode()'s pre-filter (see
     // the null-vector contract there) — the explicit filter keeps the
     // exclusion a stated semantic rather than a side effect of the
@@ -261,7 +261,7 @@ object Pq {
       .join(codebooks.select(col("sub_id"), col("centroid_id").as("code"),
         col("cv")), Seq("sub_id"))
       .select(col("query_id"), col("sub_id"), col("code"),
-        round(nativeDot(emb, col("qs"), col("cv")), 6).as("contrib"))
+        round(Similarity.nativeDot(col("qs"), col("cv")), 6).as("contrib"))
   }
 
   /** Sum each (query, neighbor)'s m contributions into the approximate
@@ -308,13 +308,13 @@ object Pq {
     val assign = Similarity.assignToCentroids(emb, coarse, idCol, vecCol)
       .select(col("vec_id").as("neighbor_id"), col("centroid_id"))
     val cents = broadcast(coarse.select(col("centroid_id"), col("cv"),
-      sqrt(nativeDot(coarse, col("cv"), col("cv"))).as("cn")))
+      sqrt(Similarity.nativeDot(col("cv"), col("cv"))).as("cn")))
     val probeScores = emb.filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        sqrt(nativeDot(emb, col(vecCol), col(vecCol))).as("qn"))
+        sqrt(Similarity.nativeDot(col(vecCol), col(vecCol))).as("qn"))
       .crossJoin(cents)
       .select(col("query_id"), col("centroid_id"),
-        round(nativeDot(emb, col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
+        round(Similarity.nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6)
           .as("cscore"))
     val probes = Similarity.perQueryTopK(probeScores, nProbe,
         idName = "centroid_id", scoreName = "cscore")

@@ -2,7 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.GaeFold
 
 /** Pairwise-preference aggregation — the RLHF-data side of the engine:
   * a preference corpus is billions of `(winner, loser)` judgments over a
@@ -734,14 +738,13 @@ object Preferences {
     // the accumulated output array per step (O(n²) per episode); the
     // kernel is one O(n) pass with identical exact-integer arithmetic
     // and the same headroom raises (guide §1.2 per-task work)
-    graft.functions.GaeFold.register(steps.sparkSession)
     val folded = base.groupBy(col(episodeCol))
       .agg(count(lit(1)).as("n_steps"),
         reverse(array_sort(collect_list(
           struct(col("__st").as("st"), col("__r").as("r"),
             col("__v").as("v"))))).as("__desc"))
-      .withColumn("__steps", call_function("gae_fold", col("__desc"),
-        lit(gammaPpm), lit(lambdaPpm)))
+      .withColumn("__steps", column(GaeFold(expression(col("__desc")),
+        Literal(gammaPpm), Literal(lambdaPpm))))
     val out = folded
       .select(col(episodeCol), col("n_steps"),
         explode(col("__steps")).as("__s"))

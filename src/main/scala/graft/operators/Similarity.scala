@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
 
-import graft.functions.{FloatVecDot, TopKAggregator}
+import graft.functions.{FloatVecDot, MmrSelect, TopKAggregator}
 
 /** Similarity search over embedding columns (`ArrayType(FloatType)`):
   * (small single-split inputs are spread across cores before CPU-heavy
@@ -32,18 +33,16 @@ object Similarity {
       lit(0.0), (acc, v) => acc + v)
 
   /** Codegen'd dot product via the custom [[FloatVecDot]] Catalyst
-    * expression (registers `vec_dot` on first use). */
-  def nativeDot(spark: SparkSession, a: Column, b: Column): Column = {
-    FloatVecDot.register(spark)
-    call_function("vec_dot", a, b)
-  }
+    * expression. */
+  def nativeDot(a: Column, b: Column): Column =
+    column(FloatVecDot(expression(a), expression(b)))
 
   def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
       lit(0.0), (acc, v) => acc + v))
 
-  private def nativeNorm(spark: SparkSession, a: Column): Column =
-    sqrt(nativeDot(spark, a, a))
+  private def nativeNorm(a: Column): Column =
+    sqrt(nativeDot(a, a))
 
   /** Bounded per-query top-k over a scored candidate relation
     * `(query_id, <idName>, <scoreName>)` → the same relation plus an
@@ -225,7 +224,6 @@ object Similarity {
         .contains(nidType),
       s"neighbor_id must be integral (tiebreak negates it inside " +
         s"max(struct)); got $nidType — map string ids to longs upstream")
-    val sp = emb.sparkSession
     // the greedy recursion runs per query inside the native mmr_select
     // kernel over the bounded candidate set (the upstream run's top-k):
     // the old k−1 driver rounds of anti-join + rescoring join + argmax
@@ -234,7 +232,6 @@ object Similarity {
     // cosine relation, tie-breaks, and the inner-join "no embedding
     // pair → never selectable" semantics are unchanged (kernel scaladoc
     // pins the parity; the q_sim14/q_x64 oracles replay the rounds).
-    graft.functions.MmrSelect.register(sp)
     // one stage boundary on the run: BOTH the candidate grouping and
     // the pairwise build reference it, and without the boundary each
     // would replay the upstream retrieval's whole lineage
@@ -251,7 +248,7 @@ object Similarity {
       .join(ev.select(col("__id").as("b_id"), col("__v").as("bv"),
         col("__n").as("bn")), Seq("b_id"))
       .select(col("query_id"), col("a_id"), col("b_id"),
-        round(round(nativeDot(sp, col("av"), col("bv")) /
+        round(round(nativeDot(col("av"), col("bv")) /
           (col("an") * col("bn")), 6) * lit(1000000))
           .cast("long").as("sim_m"))
     val cands = rel.groupBy(col("query_id"))
@@ -263,10 +260,10 @@ object Similarity {
         .as("__sims"))
     cands.join(sims, Seq("query_id"), "left")
       .select(col("query_id"),
-        explode(call_function("mmr_select", col("__cands"),
-          coalesce(col("__sims"),
-            array().cast("array<struct<a:bigint,b:bigint,s:bigint>>")),
-          lit(k), lit(lambdaTenths))).as("__s"))
+        explode(column(MmrSelect(expression(col("__cands")),
+          expression(coalesce(col("__sims"),
+            array().cast("array<struct<a:bigint,b:bigint,s:bigint>>"))),
+          expression(lit(k)), expression(lit(lambdaTenths))))).as("__s"))
       .select(col("query_id"),
         col("__s.doc_id").cast(nidType).as("doc_id"),
         col("__s.mmr_m").as("mmr_m"), col("__s.rnk").as("rnk"))
@@ -316,16 +313,15 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(tauMicros > 0 && tauMicros <= 1000000L,
       s"tau is micros of cosine in (0, 1e6], got $tauMicros")
-    val sp = emb.sparkSession
     val train = emb.filter(not(evalPred))
-      .select(col(idCol), col(vecCol), nativeNorm(sp, col(vecCol)).as("tn"))
+      .select(col(idCol), col(vecCol), nativeNorm(col(vecCol)).as("tn"))
     val ev = emb.filter(evalPred)
       .select(col(idCol).as("eval_id"), col(vecCol).as("ev"),
-        nativeNorm(sp, col(vecCol)).as("en"))
+        nativeNorm(col(vecCol)).as("en"))
     val scored = spread(train)
       .crossJoin(broadcast(ev))
       .select(col(idCol),
-        round(nativeDot(sp, col(vecCol), col("ev")) / (col("tn") * col("en")), 6)
+        round(nativeDot(col(vecCol), col("ev")) / (col("tn") * col("en")), 6)
           .as("cos"))
       .groupBy(col(idCol))
       .agg(max(col("cos")).as("max_eval_cos"))
@@ -367,16 +363,15 @@ object Similarity {
   def bitextMarginTopK(emb: DataFrame, srcPred: Column, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    val sp = emb.sparkSession
     val s = emb.filter(srcPred)
       .select(col(idCol).as("src_id"), col(vecCol).as("sv"),
-        nativeNorm(sp, col(vecCol)).as("sn"))
+        nativeNorm(col(vecCol)).as("sn"))
     val t = emb.filter(not(srcPred))
       .select(col(idCol).as("tgt_id"), col(vecCol).as("tv"),
-        nativeNorm(sp, col(vecCol)).as("tn"))
+        nativeNorm(col(vecCol)).as("tn"))
     val c = Iterate.checkpoint(spread(t).crossJoin(broadcast(s))
       .select(col("src_id"), col("tgt_id"),
-        round(round(nativeDot(sp, col("sv"), col("tv"))
+        round(round(nativeDot(col("sv"), col("tv"))
           / (col("sn") * col("tn")), 6) * 1e6).cast("long").as("cm")))
     val sx = perQueryTopK(c.select(col("src_id").as("query_id"),
         col("tgt_id").as("neighbor_id"), col("cm").cast("double").as("score")), k)
@@ -411,15 +406,14 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // norms once per vector, not once per (query × vector) pair — the HOF
     // fold is interpreted, so redundant passes are the dominant cost
-    val sp = emb.sparkSession
     val q = emb.filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        nativeNorm(sp, col(vecCol)).as("qn"))
-    val scored = spread(emb.select(col(idCol), col(vecCol), nativeNorm(sp, col(vecCol)).as("nn")))
+        nativeNorm(col(vecCol)).as("qn"))
+    val scored = spread(emb.select(col(idCol), col(vecCol), nativeNorm(col(vecCol)).as("nn")))
       .crossJoin(broadcast(q))
       .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("neighbor_id"),
-        round(nativeDot(sp, col("qv"), col(vecCol)) / (col("qn") * col("nn")), 6).as("score"))
+        round(nativeDot(col("qv"), col(vecCol)) / (col("qn") * col("nn")), 6).as("score"))
     perQueryTopK(scored, k)
   }
 
@@ -467,7 +461,6 @@ object Similarity {
     require(numPlanes > 0 && numPlanes <= 64,
       s"numPlanes must be in [1, 64], got $numPlanes — sign-LSH buckets " +
         "are bit strings; more than 64 planes means every vector is alone")
-    val sp = emb.sparkSession
     val planes = emb.filter(col(idCol) < numPlanes)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .collect()
@@ -475,7 +468,7 @@ object Similarity {
       .sortBy(_._1)
     require(planes.nonEmpty, s"no plane vectors with $idCol < $numPlanes")
     val bits = planes.map { case (_, pv) =>
-      when(round(nativeDot(sp, col(vecCol), typedLit(pv.toSeq)), 6) >= 0,
+      when(round(nativeDot(col(vecCol), typedLit(pv.toSeq)), 6) >= 0,
         lit("1")).otherwise(lit("0"))
     }
     spread(emb).select(col(idCol).as("vec_id"), concat(bits: _*).as("bucket"))
@@ -509,9 +502,8 @@ object Similarity {
     * argmax, zero shuffle. */
   private[graft] def ivfAssignInline(emb: DataFrame, numCentroids: Int,
       idCol: String, vecCol: String): DataFrame = {
-    val sp = emb.sparkSession
     val withN = emb.select(col(idCol).as("vec_id"), col(vecCol),
-      nativeNorm(sp, col(vecCol)).as("vn"))
+      nativeNorm(col(vecCol)).as("vn"))
     val idType = emb.schema(idCol).dataType
     val cents = emb.filter(col(idCol) < numCentroids)
       .select(col(idCol).cast("long"), col(vecCol))
@@ -526,7 +518,7 @@ object Similarity {
     }
     val candidates = cents.map { case (cid, cv) =>
       val score = round(
-        nativeDot(sp, col(vecCol), typedLit(cv.toSeq)) / (col("vn") * lit(seqNorm(cv))), 6)
+        nativeDot(col(vecCol), typedLit(cv.toSeq)) / (col("vn") * lit(seqNorm(cv))), 6)
       struct(score.as("score"), lit(-cid).as("neg"), lit(cid).cast(idType).as("cid"))
     }
     val best = greatest(candidates: _*)
@@ -566,16 +558,15 @@ object Similarity {
     * -centroid_id tie-break fire on scores that are truly unequal. */
   def assignToCentroids(emb: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val sp = emb.sparkSession
     val withN = emb.select(col(idCol).as("vec_id"), col(vecCol),
-      nativeNorm(sp, col(vecCol)).as("vn"))
+      nativeNorm(col(vecCol)).as("vn"))
     val cents = broadcast(centroids.select(col("centroid_id"), col("cv"),
-      nativeNorm(sp, col("cv")).as("cn")))
+      nativeNorm(col("cv")).as("cn")))
     val ord = round(col("score") * 1e6).cast("long") * lit(4294967296L) -
       col("centroid_id").cast("long")
     withN.crossJoin(cents)
       .select(col("vec_id"),
-        round(nativeDot(sp, col(vecCol), col("cv")) / (col("vn") * col("cn")), 6)
+        round(nativeDot(col(vecCol), col("cv")) / (col("vn") * col("cn")), 6)
           .as("score"),
         col("centroid_id"))
       .groupBy(col("vec_id"))
@@ -616,11 +607,10 @@ object Similarity {
   private def ivfTopKCore(emb: DataFrame, assignment: DataFrame,
       centroids: DataFrame, queryPred: Column, nProbe: Int, k: Int,
       idCol: String, vecCol: String): DataFrame = {
-    val sp = emb.sparkSession
     val assign = assignment
       .select(col("vec_id").as("neighbor_id"), col("centroid_id"))
     val cents = centroids.select(col("centroid_id"), col("cv"),
-      nativeNorm(sp, col("cv")).as("cn"))
+      nativeNorm(col("cv")).as("cn"))
     // probe lists per query: nProbe best centroids. Scoring is map-only
     // (broadcast centroids); the bounded top-nProbe aggregation ships only
     // (query_id, centroid_id) pairs — the query VECTOR never rides the
@@ -628,10 +618,10 @@ object Similarity {
     // centroid), and rejoins exactly once per query afterwards.
     val q = emb.filter(queryPred)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        nativeNorm(sp, col(vecCol)).as("qn"))
+        nativeNorm(col(vecCol)).as("qn"))
     val probeScores = q.crossJoin(broadcast(cents))
       .select(col("query_id"), col("centroid_id"),
-        round(nativeDot(sp, col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cscore"))
+        round(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6).as("cscore"))
     val probes = perQueryTopK(probeScores, nProbe, idName = "centroid_id",
         scoreName = "cscore")
       .select(col("query_id"), col("centroid_id"))
@@ -640,9 +630,9 @@ object Similarity {
     val cands = probes.join(assign, Seq("centroid_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
-        nativeNorm(sp, col(vecCol)).as("nn")), Seq("neighbor_id"))
+        nativeNorm(col(vecCol)).as("nn")), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(nativeDot(sp, col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("score"))
+        round(nativeDot(col("qv"), col("nv")) / (col("qn") * col("nn")), 6).as("score"))
     perQueryTopK(cands, k)
   }
 
@@ -695,7 +685,6 @@ object Similarity {
         "cluster pair work is quadratic in cluster size; scale k with " +
         "the corpus (kFor(n), or semanticDedupAuto), or raise " +
         "maxAvgClusterSize deliberately")
-    val sp = emb.sparkSession
     val cents = Kmeans.train(emb, k, iters, idCol, vecCol)
     // materialized: the assignment subtree (corpus × centroids argmax)
     // feeds the pair self-join twice AND the final status join — without
@@ -704,14 +693,14 @@ object Similarity {
       .select(col("vec_id"), col("centroid_id")))
     val members = assign.join(
       emb.select(col(idCol).as("vec_id"), col(vecCol).as("v"),
-        nativeNorm(sp, col(vecCol)).as("nrm")), Seq("vec_id"))
+        nativeNorm(col(vecCol)).as("nrm")), Seq("vec_id"))
     val pairs = members.select(col("centroid_id"), col("vec_id").as("a_id"),
         col("v").as("va"), col("nrm").as("na"))
       .join(members.select(col("centroid_id"), col("vec_id").as("b_id"),
         col("v").as("vb"), col("nrm").as("nb")), Seq("centroid_id"))
       .filter(col("a_id") < col("b_id"))
       .select(col("b_id"),
-        round(nativeDot(sp, col("va"), col("vb")) / (col("na") * col("nb")), 6)
+        round(nativeDot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("score"))
     val dropped = pairs.filter(col("score") >= tau)
       .select(col("b_id").as("vec_id")).distinct()
@@ -760,15 +749,14 @@ object Similarity {
     val pairs = b.select(col("vec_id").as("a_id"), col("bucket"))
       .join(b.select(col("vec_id").as("b_id"), col("bucket")), Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
-    val sp = emb.sparkSession
-    val withNorm = emb.select(col(idCol), col(vecCol), nativeNorm(sp, col(vecCol)).as("nrm"))
+    val withNorm = emb.select(col(idCol), col(vecCol), nativeNorm(col(vecCol)).as("nrm"))
     pairs
       .join(withNorm.select(col(idCol).as("a_id"), col(vecCol).as("va"),
         col("nrm").as("na")), Seq("a_id"))
       .join(withNorm.select(col(idCol).as("b_id"), col(vecCol).as("vb"),
         col("nrm").as("nb")), Seq("b_id"))
       .select(col("a_id"), col("b_id"),
-        round(nativeDot(sp, col("va"), col("vb")) / (col("na") * col("nb")), 6).as("score"))
+        round(nativeDot(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("score"))
       .filter(col("score") >= minScore)
   }
 
@@ -793,7 +781,6 @@ object Similarity {
     * centroid_cos_micros)`. */
   def embeddingDrift(a: DataFrame, b: DataFrame,
       vecCol: String = "embedding"): DataFrame = {
-    val sp = a.sparkSession
     def centroid(df: DataFrame, tag: String): DataFrame =
       df.filter(col(vecCol).isNotNull && size(col(vecCol)) > 0)
         .select(posexplode(col(vecCol)).as(Seq("__i", "__v")))
@@ -805,9 +792,9 @@ object Similarity {
         .agg(count(lit(1)).as(s"n_$tag"),
           (expr(s"cast(round(avg(__m$tag), 6) as decimal(18,6))")
             * 1000000L).cast("long").as(s"msq_${tag}_micros"))
-    val sa = stats(a.select(nativeDot(sp, col(vecCol), col(vecCol))
+    val sa = stats(a.select(nativeDot(col(vecCol), col(vecCol))
       .as("__ma"), col(vecCol)), "a")
-    val sb = stats(b.select(nativeDot(sp, col(vecCol), col(vecCol))
+    val sb = stats(b.select(nativeDot(col(vecCol), col(vecCol))
       .as("__mb"), col(vecCol)), "b")
     val cos = centroid(a, "a").join(centroid(b, "b"), Seq("__i"))
       .agg(sum(col("__ca") * col("__cb")).as("__d"),

@@ -1,7 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.{
+  BleuMatches, BpeEncode, CdcCuts, CharGramTf, ChrfMatches, DeflateLen,
+  DistinctCount, EditDistTokens, LcsTokens, MapMargin, TokenBucketTf,
+  TokenTfVec, UnicodeNormalize, UnigramEncode, WordPieceEncode}
 
 /** Text-analysis operators for LLM-data-pipeline preprocessing over a
   * string column: tokenization, shingling, quality scoring, n-gram
@@ -80,11 +87,10 @@ object TextAnalysis {
             col("w").substr(i + 1, lit(1)).as("b")))).as("p"))
         .select(col("wc"), col("p.a"), col("p.b")), k1)
     if (k2 == 0) return m1
-    graft.functions.BpeEncode.register(df.sparkSession)
     val spec1 = m1.map { case (a, b) => s"$a $b" }.mkString("\n")
     val m2 = topPairs(
       wc.select(col("wc"),
-          split(call_function("bpe_encode", col("w"), lit(spec1)), " ").as("ss"))
+          split(column(BpeEncode(expression(col("w")), Literal(spec1))), " ").as("ss"))
         .filter(size(col("ss")) >= 2)
         .select(col("wc"), explode(transform(
           sequence(lit(0), size(col("ss")) - 2),
@@ -102,10 +108,9 @@ object TextAnalysis {
     * UDF, one codegen'd pass per document. */
   def bpeTokenize(df: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.functions.BpeEncode.register(df.sparkSession)
     val spec = merges.map { case (a, b) => s"$a $b" }.mkString("\n")
     df.select(col(idCol),
-        call_function("bpe_encode", col(textCol), lit(spec)).as("bpe"))
+        column(BpeEncode(expression(col(textCol)), Literal(spec))).as("bpe"))
       .withColumn("n_bpe", size(tokens(col("bpe"))).cast("long"))
   }
 
@@ -163,13 +168,12 @@ object TextAnalysis {
     * stream over them. */
   def bpeTokenizeGpt2(df: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.functions.BpeEncode.register(df.sparkSession)
     val spec = merges.map { case (a, b) => s"$a $b" }.mkString("\n")
     df.select(col(idCol), gpt2MappedPieces(col(textCol)).as("__ps"))
       .select(col(idCol), array_join(col("__ps"), " ").as("pretok"),
         size(col("__ps")).cast("long").as("n_pieces"))
       .withColumn("bpe",
-        call_function("bpe_encode", col("pretok"), lit(spec)))
+        column(BpeEncode(expression(col("pretok")), Literal(spec))))
       .withColumn("n_bpe", size(tokens(col("bpe"))).cast("long"))
   }
 
@@ -275,11 +279,10 @@ object TextAnalysis {
   def unigramTokenize(df: DataFrame, pieces: Seq[(String, Long)],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(pieces.nonEmpty, "need a non-empty piece table")
-    graft.functions.UnigramEncode.register(df.sparkSession)
     val spec = pieces.sortBy(_._1)
       .map { case (p, w) => s"$p\t$w" }.mkString("\n")
     df.select(col(idCol),
-        call_function("unigram_encode", col(textCol), lit(spec)).as("sp"))
+        column(UnigramEncode(expression(col(textCol)), Literal(spec))).as("sp"))
       .withColumn("n_sp",
         when(length(col("sp")) === 0, lit(0L))
           .otherwise(size(split(col("sp"),
@@ -349,11 +352,10 @@ object TextAnalysis {
   def wordPieceTokenize(df: DataFrame, vocab: Seq[String],
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(vocab.nonEmpty, "need a non-empty vocabulary")
-    graft.functions.WordPieceEncode.register(df.sparkSession)
     val spec = vocab.sorted.mkString("\n")
     val sep = graft.functions.WordPieceEncode.Sep
     df.select(col(idCol),
-        call_function("wordpiece_encode", col(textCol), lit(spec)).as("wp"))
+        column(WordPieceEncode(expression(col(textCol)), Literal(spec))).as("wp"))
       .withColumn("n_wp",
         when(length(col("wp")) === 0, lit(0L))
           .otherwise(size(split(col("wp"), sep)).cast("long")))
@@ -800,12 +802,11 @@ object TextAnalysis {
     // — in-suite timing after ~110 queries of heap/page-cache churn plus
     // box load, not a code regression (code unchanged since the 1.41s
     // A/B above). SCALE.md round-7 table is the record.
-    graft.functions.DistinctCount.register(df.sparkSession)
     val base = df.select(col(idCol).as("sid"), length(col(textCol)).as("n_chars"),
       tokens(col(textCol)).as("toks"))
     val tok = base.select(col("sid"), col("n_chars"),
       size(col("toks")).as("n_tokens"),
-      call_function("distinct_count", col("toks")).as("n_distinct"))
+      column(DistinctCount(expression(col("toks")))).as("n_distinct"))
     val g2 = ngramCounts(df, textCol, idCol, 2)
     val mx2 = g2.groupBy(col("sid")).agg(max(col("cnt")).as("mc"))
     val top2 = g2.join(mx2, Seq("sid")).filter(col("cnt") === col("mc"))
@@ -841,13 +842,12 @@ object TextAnalysis {
       threshold: Double = 0.5): DataFrame = {
     // native O(n) distinct_count for the same reason as repetitionMetrics
     // above: map-only site, O(n²) interpreted HOF replaced in place
-    graft.functions.DistinctCount.register(df.sparkSession)
     val toksed = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
     val nTok = size(col("toks"))
     val avgLen = round(length(array_join(col("toks"), "")).cast("double") / nTok, 4)
     val stopRatio = round(hitCount(col("toks"), langStopwords.head._2)
       .cast("double") / nTok, 4)
-    val dupFrac = round((nTok - call_function("distinct_count", col("toks")))
+    val dupFrac = round((nTok - column(DistinctCount(expression(col("toks")))))
       .cast("double") / nTok, 6)
     // weights chosen by inspection: longer docs and stopword presence up,
     // extreme token length and repetition down — stand-ins for trained
@@ -1946,9 +1946,8 @@ object TextAnalysis {
     * engine-specific output (zlib), so rows-only checked like the
     * sketches. */
   def compressionRatio(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.DeflateLen.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"), length(col(textCol)).as("n_chars"),
-        call_function("deflate_len", col(textCol)).as("n_deflate"))
+        column(DeflateLen(expression(col(textCol)))).as("n_deflate"))
       .withColumn("ratio",
         round(col("n_deflate").cast("double") / col("n_chars"), 6))
   }
@@ -2138,9 +2137,8 @@ object TextAnalysis {
     * f_ppm)`. */
   def rougeL(df: DataFrame, refCol: String, hypCol: String,
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.LcsTokens.register(df.sparkSession)
     df.select(col(idCol),
-        call_function("lcs_tokens", col(refCol), col(hypCol)).cast("long")
+        column(LcsTokens(expression(col(refCol)), expression(col(hypCol)))).cast("long")
           .as("lcs"),
         size(tokens(col(refCol))).cast("long").as("n_ref"),
         size(tokens(col(hypCol))).cast("long").as("n_hyp"))
@@ -2190,7 +2188,6 @@ object TextAnalysis {
     require(thresholdPpm >= 1, s"thresholdPpm must be >= 1")
     require(maxTokenDf >= 1, s"maxTokenDf must be >= 1")
     require(maxPairsPerCand >= 1, s"maxPairsPerCand must be >= 1")
-    graft.functions.LcsTokens.register(cands.sparkSession)
     val ct = cands.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__cid"), col(textCol).as("__ctext"))
     val st = seeds.filter(col(textCol).isNotNull)
@@ -2211,7 +2208,7 @@ object TextAnalysis {
       .select(col("__cid"), col("__sid")).distinct())
     val scored = pairs.join(ct, Seq("__cid")).join(st, Seq("__sid"))
       .select(col("__cid"), col("__sid"),
-        call_function("lcs_tokens", col("__stext"), col("__ctext"))
+        column(LcsTokens(expression(col("__stext")), expression(col("__ctext"))))
           .cast("long").as("__lcs"),
         size(tokens(col("__stext"))).cast("long").as("__nr"),
         size(tokens(col("__ctext"))).cast("long").as("__nh"))
@@ -2273,7 +2270,6 @@ object TextAnalysis {
     require(thresholdPpm >= 1, s"thresholdPpm must be >= 1")
     require(maxTokenDf >= 1, s"maxTokenDf must be >= 1")
     require(maxPairsPerCand >= 1, s"maxPairsPerCand must be >= 1")
-    graft.functions.LcsTokens.register(cands.sparkSession)
     val ct = cands.filter(col(textCol).isNotNull)
       .select(col(idCol).as("__cid"), col(textCol).as("__ctext"))
     val (pairs, scored) = siIntraScoredPairs(ct, maxTokenDf)
@@ -2332,7 +2328,7 @@ object TextAnalysis {
       .join(ct.select(col("__cid").as("__hi"), col("__ctext").as("__ht")),
         Seq("__hi"))
       .select(col("__hi"), col("__lo"),
-        call_function("lcs_tokens", col("__lt"), col("__ht"))
+        column(LcsTokens(expression(col("__lt")), expression(col("__ht"))))
           .cast("long").as("__lcs"),
         size(tokens(col("__lt"))).cast("long").as("__nr"),
         size(tokens(col("__ht"))).cast("long").as("__nh"))
@@ -2522,9 +2518,8 @@ object TextAnalysis {
     * n_hyp, wer_ppm)`. */
   def wer(df: DataFrame, refCol: String, hypCol: String,
       idCol: String = "doc_id"): DataFrame = {
-    graft.functions.EditDistTokens.register(df.sparkSession)
     df.select(col(idCol),
-        call_function("edit_dist_tokens", col(refCol), col(hypCol))
+        column(EditDistTokens(expression(col(refCol)), expression(col(hypCol))))
           .cast("long").as("edits"),
         size(tokens(col(refCol))).cast("long").as("n_ref"),
         size(tokens(col(hypCol))).cast("long").as("n_hyp"))
@@ -2717,7 +2712,6 @@ object TextAnalysis {
     // counts-to-lens join) are gone, and with them every exchange
     // (guide §2.4). The four element_at reads share ONE kernel subtree
     // (codegen subexpression elimination).
-    graft.functions.BleuMatches.register(df.sparkSession)
     val scorable = Par.spread(
       df.filter(col(refCol).isNotNull && col(hypCol).isNotNull)
         .select(col(idCol).as("__id"), col(refCol).as("__r"),
@@ -2725,7 +2719,7 @@ object TextAnalysis {
     val withM = scorable.select(col("__id"),
       size(tokens(col("__r"))).cast("long").as("n_ref"),
       size(tokens(col("__h"))).cast("long").as("n_hyp"),
-      call_function("bleu_matches", col("__r"), col("__h")).as("__mm"))
+      column(BleuMatches(expression(col("__r")), expression(col("__h")))).as("__mm"))
     (1 to 4).foldLeft(withM) { (d, n) =>
       d.withColumn(s"m$n", element_at(col("__mm"), n))
         .withColumn(s"t$n", greatest(col("n_hyp") - lit(n - 1), lit(0L)))
@@ -2823,7 +2817,6 @@ object TextAnalysis {
     // (guide §2.4: remove shuffles outright). The six element_at reads
     // share ONE kernel subtree (whole-stage codegen's subexpression
     // elimination evaluates it once per row).
-    graft.functions.ChrfMatches.register(df.sparkSession)
     val scorable = Par.spread(df
       .filter(col(refCol).isNotNull && col(hypCol).isNotNull)
       .select(col(idCol).as("__id"),
@@ -2832,7 +2825,7 @@ object TextAnalysis {
     val withM = scorable.select(col("__id"),
       length(col("__r")).cast("long").as("n_ref_chars"),
       length(col("__h")).cast("long").as("n_hyp_chars"),
-      call_function("chrf_matches", col("__r"), col("__h")).as("__mm"))
+      column(ChrfMatches(expression(col("__r")), expression(col("__h")))).as("__mm"))
     (1 to 6).foldLeft(withM) { (d, n) =>
       d.withColumn(s"__mm$n", element_at(col("__mm"), n))
         .withColumn(s"__th$n",
@@ -3007,12 +3000,11 @@ object TextAnalysis {
     // dims-length vector per doc in one projection pass — the explode →
     // md5 → two keyed aggregations → dims-length transform reassembly
     // are gone, and with them both exchanges (guide §2.4)
-    graft.functions.TokenTfVec.register(df.sparkSession)
     Par.spread(df.select(col(idCol).as("doc_id"),
         tokens(lower(col(textCol))).as("toks")))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
-        call_function("token_tf_vec", col("toks"), lit(dims)).as("vec"))
+        column(TokenTfVec(expression(col("toks")), Literal(dims))).as("vec"))
   }
 
   /** Persist BOTH sides of the hybrid-retrieval index in one corpus
@@ -3098,7 +3090,6 @@ object TextAnalysis {
     // map aggregation + broadcast added driver stages that cost more
     // than the small shuffles they removed. The map-side fold lives
     // where the corpus is: linearQualityScore / langIdTrained.
-    graft.functions.TokenBucketTf.register(df.sparkSession)
     val tf = Iterate.checkpoint(Par.spread(
         df.filter(col(labelCol).isNotNull)
           .select(col(idCol).as("doc_id"),
@@ -3107,7 +3098,7 @@ object TextAnalysis {
             tokens(lower(col(textCol))).as("toks")))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), col("y"),
-        explode(call_function("token_bucket_tf", col("toks"), lit(dims))))
+        explode(column(TokenBucketTf(expression(col("toks")), Literal(dims)))))
       .select(col("doc_id"), col("y"), col("key").as("b"),
         col("value").as("tf")))
     Iterate.fixpoint(tf.select(col("b"), lit(0L).as("wm")).limit(0),
@@ -3162,12 +3153,11 @@ object TextAnalysis {
     * contract as [[charGramTf]]). */
   private def charGramTfMap(df: DataFrame, textCol: String,
       idCol: String, dims: Int, nMin: Int, nMax: Int): DataFrame = {
-    graft.functions.CharGramTf.register(df.sparkSession)
     Par.spread(df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"), lower(col(textCol)).as("__t")))
       .select(col("doc_id"),
-        call_function("char_gram_tf", col("__t"),
-          lit(dims), lit(nMin), lit(nMax)).as("__tf"))
+        column(CharGramTf(expression(col("__t")),
+          Literal(dims), Literal(nMin), Literal(nMax))).as("__tf"))
       .filter(size(map_keys(col("__tf"))) > 0)
   }
 
@@ -3178,10 +3168,9 @@ object TextAnalysis {
     * [[graft.functions.MapMargin]] kernel: the equivalent
     * `aggregate(map_entries(…))` HOF is CodegenFallback and measurably
     * slower. A null weight map (a class absent from a round's weight
-    * state) contributes 0, like the old left join's coalesce. Callers
-    * must register the kernel ([[graft.functions.MapMargin.register]]). */
+    * state) contributes 0, like the old left join's coalesce. */
   private def mapMargin(tfMap: Column, wMap: Column): Column =
-    coalesce(call_function("map_margin", tfMap, wMap), lit(0L))
+    coalesce(column(MapMargin(expression(tfMap), expression(wMap))), lit(0L))
 
   /** Train language ID IN-ENGINE — the multi-class (one-vs-rest)
     * extension of [[trainLinearQuality]], closing the gap between the
@@ -3280,7 +3269,6 @@ object TextAnalysis {
         "packing space — a LID label set is tens, not millions")
     val cls = classNames.zipWithIndex
       .map { case (c, i) => (c, i.toLong) }.toSeq.toDF("c", "__ci")
-    graft.functions.MapMargin.register(df.sparkSession)
     // margins map-side (the trainLangId fold): per (doc, class) one
     // fold over ≤ dims TF-map entries against the broadcast nested
     // weight map — the (doc, class, bucket)-grain join + keyed sum and
@@ -3339,8 +3327,6 @@ object TextAnalysis {
     // TF-map entries per doc against the broadcast bucket→weight map —
     // no (doc, bucket)-grain explode, no keyed-sum exchange
     // (guide §2.4); identical integer arithmetic
-    graft.functions.TokenBucketTf.register(df.sparkSession)
-    graft.functions.MapMargin.register(df.sparkSession)
     val wMap = weights
       .select(col("bucket").cast("long").as("b"), col("wm").cast("long"))
       .agg(map_from_entries(collect_list(struct(col("b"), col("wm"))))
@@ -3349,7 +3335,7 @@ object TextAnalysis {
         tokens(lower(col(textCol))).as("toks")))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"),
-        call_function("token_bucket_tf", col("toks"), lit(dims))
+        column(TokenBucketTf(expression(col("toks")), Literal(dims)))
           .as("__tf"))
       .crossJoin(broadcast(wMap))
       .select(col("doc_id"), mapMargin(col("__tf"), col("__w")).as("__s"))
@@ -3387,13 +3373,12 @@ object TextAnalysis {
     // per gram) — the HOF formulation re-evaluated the whole shingle
     // array per gram index inside interpreted lambdas (O(n²·k) string
     // work per doc); parity pinned by GramKernelsSpec + the q_x36 oracle
-    graft.functions.CdcCuts.register(df.sparkSession)
     val toksed = Par.spread(df.select(col(idCol).as("doc_id"),
         tokens(col(textCol)).as("toks")))
       .filter(size(col("toks")) > 0)
     toksed
       .withColumn("cuts",
-        call_function("cdc_cuts", col("toks"), lit(k), lit(divisor)))
+        column(CdcCuts(expression(col("toks")), Literal(k), Literal(divisor))))
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(1), size(col("cuts")) - 1),
           ci => array_join(slice(col("toks"),
@@ -3428,11 +3413,8 @@ object TextAnalysis {
     * that must precede hash-keyed dedup on crawl text (composed vs
     * decomposed accents hash differently; NFKC additionally folds
     * ligatures/full-width forms). `form`: NFC|NFD|NFKC|NFKD. */
-  def normalizeUnicode(spark: org.apache.spark.sql.SparkSession,
-      c: Column, form: String = "NFKC"): Column = {
-    graft.functions.UnicodeNormalize.register(spark)
-    call_function("unicode_normalize", c, lit(form))
-  }
+  def normalizeUnicode(c: Column, form: String = "NFKC"): Column =
+    column(UnicodeNormalize(expression(c), form))
 
   /** Encoding-artifact (mojibake) detection — the web-corpus hygiene
     * gate next to [[normalizeUnicode]]: UTF-8 text decoded once too

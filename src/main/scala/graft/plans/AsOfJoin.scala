@@ -15,7 +15,6 @@ import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native as-of join: for each left row, attach the latest right row with
   * the same key whose time is <= the left row's time (left-outer: the
@@ -206,9 +205,15 @@ case class AsOfJoinExec(
     val rightInput = ctx.addMutableState("scala.collection.Iterator", "asofRightInput",
       v => s"$v = inputs[1];", forceInline = true)
     // the peeked-but-not-consumed right row, and the single piece of merge
-    // state: a copy of the last eligible right row at the frontier
-    val rightRow = ctx.addMutableState("InternalRow", "asofRightRow")
-    val lastRight = ctx.addMutableState("InternalRow", "asofLastRight")
+    // state: a copy of the last eligible right row at the frontier. Both
+    // are INPUT_ROWs below, so they must be plain fields: a compacted state
+    // is an array slot, and an expression that splits its code into
+    // functions (the struct of a composite key) cannot take a slot as a
+    // parameter name.
+    val rightRow = ctx.addMutableState("InternalRow", "asofRightRow",
+      forceInline = true)
+    val lastRight = ctx.addMutableState("InternalRow", "asofLastRight",
+      forceInline = true)
 
     val leftRow = ctx.freshName("asofLeftRow")
     val matched = ctx.freshName("asofMatched")
@@ -330,85 +335,6 @@ case class AsOfJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-/** Config-time injection: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * wires the whole custom surface — the as-of planner strategy plus the
-  * native expressions — into every session of the application. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    // SQL text surface for the as-of join: TVF parse + side-aware resolve
-    e.injectTableFunction((AsOfSql.identifier, AsOfSql.info, AsOfSql.builder))
-    e.injectResolutionRule(_ => ResolveAsOfJoinTvf)
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.FloatVecDot].getName, "vec_dot"),
-      exprs => graft.functions.FloatVecDot(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("hex_hamming"),
-      new ExpressionInfo(classOf[graft.functions.HexHamming].getName, "hex_hamming"),
-      exprs => graft.functions.HexHamming(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[graft.functions.JaroWinkler].getName, "jaro_winkler"),
-      exprs => graft.functions.JaroWinkler(exprs.head, exprs(1))))
-    // the map-only dedup kernels, so pure-SQL sessions can build MinHash
-    // bands / SimHash signatures without touching the DataFrame API
-    e.injectFunction((FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[graft.functions.MinHashBands].getName, "minhash_bands"),
-      exprs => graft.functions.MinHashBands(exprs.head, exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "simhash64"),
-      exprs => graft.functions.SimHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[graft.functions.DeflateLen].getName, "deflate_len"),
-      exprs => graft.functions.DeflateLen(exprs.head)))
-    e.injectFunction((FunctionIdentifier("distinct_count"),
-      new ExpressionInfo(classOf[graft.functions.DistinctCount].getName, "distinct_count"),
-      exprs => graft.functions.DistinctCount(exprs.head)))
-    e.injectFunction((FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[graft.functions.UnicodeNormalize].getName, "unicode_normalize"),
-      graft.functions.UnicodeNormalize.builder))
-    // the tokenizer + PQ kernels too: a pure-SQL session can BPE-encode
-    // against an inlined merges table and PQ-encode against an inlined
-    // codebook without ever touching the DataFrame API (the per-call
-    // `register` helpers in the operators, which skip a function the
-    // session already has, remain for sessions built without the extensions)
-    e.injectFunction((FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[graft.functions.BpeEncode].getName, "bpe_encode"),
-      exprs => graft.functions.BpeEncode(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[graft.functions.PqEncode].getName, "pq_encode"),
-      exprs => graft.functions.PqEncode(exprs)))
-    // the map-only eval-metric + hashed-TF kernels (round-17
-    // optimization: the MinHashBands explode-collapse move applied to
-    // chrF/BLEU counting and the fastText-style feature spaces)
-    e.injectFunction((FunctionIdentifier("chrf_matches"),
-      new ExpressionInfo(classOf[graft.functions.ChrfMatches].getName, "chrf_matches"),
-      exprs => graft.functions.ChrfMatches(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("bleu_matches"),
-      new ExpressionInfo(classOf[graft.functions.BleuMatches].getName, "bleu_matches"),
-      exprs => graft.functions.BleuMatches(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("char_gram_tf"),
-      new ExpressionInfo(classOf[graft.functions.CharGramTf].getName, "char_gram_tf"),
-      exprs => graft.functions.CharGramTf(exprs.head, exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((FunctionIdentifier("token_bucket_tf"),
-      new ExpressionInfo(classOf[graft.functions.TokenBucketTf].getName, "token_bucket_tf"),
-      exprs => graft.functions.TokenBucketTf(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("gae_fold"),
-      new ExpressionInfo(classOf[graft.functions.GaeFold].getName, "gae_fold"),
-      exprs => graft.functions.GaeFold(exprs.head, exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("map_margin"),
-      new ExpressionInfo(classOf[graft.functions.MapMargin].getName, "map_margin"),
-      exprs => graft.functions.MapMargin(exprs.head, exprs(1))))
-    e.injectFunction((FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[graft.functions.CdcCuts].getName, "cdc_cuts"),
-      exprs => graft.functions.CdcCuts(exprs.head, exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("token_tf_vec"),
-      new ExpressionInfo(classOf[graft.functions.TokenTfVec].getName, "token_tf_vec"),
-      exprs => graft.functions.TokenTfVec(exprs.head, exprs(1))))
-  }
 }
 
 object AsOfJoin {

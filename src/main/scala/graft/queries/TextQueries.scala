@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
+
+import graft.functions.DeflateLen
 
 import graft.Q
 import graft.operators.{Similarity, TextAnalysis}
@@ -1561,13 +1564,12 @@ object TextQueries extends graft.QueryPack {
     // codegen'd deflate_len calls per row inside the scan stage.
     Q("q_x55_compress_verdicts",
       (s, d) => {
-        graft.functions.DeflateLen.register(s)
         Tables.documents(s, d)
           .select(col("doc_id"), coalesce(col("text"), lit("")).as("__t"))
           .select(col("doc_id"),
             octet_length(col("__t")).cast("long").as("n_bytes"),
-            call_function("deflate_len", col("__t")).cast("long").as("__dl"),
-            call_function("deflate_len", concat(col("__t"), col("__t")))
+            column(DeflateLen(expression(col("__t")))).cast("long").as("__dl"),
+            column(DeflateLen(expression(concat(col("__t"), col("__t")))))
               .cast("long").as("__dl2"))
           .select(col("doc_id"), col("n_bytes"),
             (col("__dl") > 0).as("compress_pos"),
@@ -1655,9 +1657,9 @@ object TextQueries extends graft.QueryPack {
         val raw = concat(col("text"), lit(" e\u0301 A\u0300 x\u00e9"))
         Tables.documents(s, d).select(
           col("doc_id"),
-          TextAnalysis.normalizeUnicode(s, raw, "NFC").as("text_nfc"),
+          TextAnalysis.normalizeUnicode(raw, "NFC").as("text_nfc"),
           length(raw).as("n_raw"),
-          length(TextAnalysis.normalizeUnicode(s, raw, "NFC")).as("n_nfc"))
+          length(TextAnalysis.normalizeUnicode(raw, "NFC")).as("n_nfc"))
       },
       Some("""WITH r AS (SELECT doc_id,
              |    text || ' e' || chr(769) || ' A' || chr(768) || ' x' || chr(233) AS raw

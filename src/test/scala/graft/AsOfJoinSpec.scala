@@ -123,7 +123,10 @@ class AsOfJoinSpec extends AnyFunSuite {
         .select(col("id"), col("tag"))
         .collect().map(row => row.getLong(0) ->
           (if (row.isNullAt(1)) null else row.getString(1))).toMap
-    val gen = run()
+    // the struct key must compile: without fallback a codegen failure
+    // throws instead of silently running the merge interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val gen = try run() finally spark.conf.unset("spark.sql.codegen.fallback")
     assert(gen === Map(1L -> "a", 2L -> "b", 3L -> null, 4L -> null))
     // and the codegen'd merge agrees with the interpreted one on structs
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

@@ -24,7 +24,6 @@ class GramKernelsSpec extends AnyFunSuite {
 
   test("chrf_matches == the relational 6-order clipped count") {
     import spark.implicits._
-    graft.functions.ChrfMatches.register(spark)
     val rows = (1 to 200).map(i =>
       (i.toLong, randText(40).replaceAll("\\s+", ""),
         randText(40).replaceAll("\\s+", "")))
@@ -51,7 +50,6 @@ class GramKernelsSpec extends AnyFunSuite {
 
   test("bleu_matches == the relational 4-order clipped token count") {
     import spark.implicits._
-    graft.functions.BleuMatches.register(spark)
     val words = Seq("the", "cat", "sat", "on", "mat", "a", "€x")
     def sent() = (0 until rnd.nextInt(12)).map(_ =>
       words(rnd.nextInt(words.length))).mkString(" ")
@@ -79,7 +77,6 @@ class GramKernelsSpec extends AnyFunSuite {
     val rows = (1 to 120).map(i => (i.toLong, randText(60).toLowerCase))
     val df = rows.toDF("doc_id", "__t")
     // the kernel path (what charGramTf now runs)
-    graft.functions.CharGramTf.register(spark)
     val got = df.select(col("doc_id"),
         explode(call_function("char_gram_tf", col("__t"),
           lit(64), lit(2), lit(3))))
@@ -102,8 +99,6 @@ class GramKernelsSpec extends AnyFunSuite {
 
   test("token_bucket_tf / token_tf_vec == explode + bucketOfKey(md5) + count") {
     import spark.implicits._
-    graft.functions.TokenBucketTf.register(spark)
-    graft.functions.TokenTfVec.register(spark)
     val words = Seq("alpha", "beta", "gamma", "δelta", "alpha")
     val rows = (1 to 120).map { i =>
       (i.toLong, (0 until rnd.nextInt(20)).map(_ =>
@@ -136,7 +131,6 @@ class GramKernelsSpec extends AnyFunSuite {
 
   test("cdc_cuts == the HOF shingle-boundary formulation") {
     import spark.implicits._
-    graft.functions.CdcCuts.register(spark)
     val words = Seq("aa", "bb", "cc", "dd", "ee", "ff", "gg")
     val rows = (1 to 150).map { i =>
       (i.toLong, (0 until rnd.nextInt(30)).map(_ =>

@@ -24,7 +24,6 @@ class HexHammingSpec extends AnyFunSuite {
 
   test("expression agrees with the composed conv/xor/bit_count columns") {
     import spark.implicits._
-    HexHamming.register(spark)
     val hexes = Seq("0123456789abcdef", "fedcba9876543210",
       "0000000000000000", "ffffffffffffffff", "0123456789abcdee")
     val pairs = for (a <- hexes; b <- hexes) yield (a, b)
@@ -42,7 +41,6 @@ class HexHammingSpec extends AnyFunSuite {
 
   test("null and garbage inputs yield SQL null") {
     import spark.implicits._
-    HexHamming.register(spark)
     val df = Seq(("ab", "ab"), ("ab", "abc"), ("zz", "ab"), (null, "ab"))
       .toDF("a", "b")
       .select(call_function("hex_hamming", col("a"), col("b")).as("h"))

@@ -30,7 +30,6 @@ class JaroWinklerSpec extends AnyFunSuite {
 
   test("expression: codegen path equals the kernel; null contract") {
     import spark.implicits._
-    JaroWinkler.register(spark)
     val pairs = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"),
       ("", ""), ("x", "x"), ("Customer#001", "Customer#011"))
     val got = pairs.toDF("a", "b")

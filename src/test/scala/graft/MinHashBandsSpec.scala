@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.MinHashBands
 import graft.operators.Dedup
 
 class MinHashBandsSpec extends AnyFunSuite {
@@ -13,7 +12,6 @@ class MinHashBandsSpec extends AnyFunSuite {
 
   test("kernel bands equal the relational formulation's band hashes") {
     import spark.implicits._
-    MinHashBands.register(spark)
     val df = Seq((1L, Seq("a b c", "b c d", "a b c")), (2L, Seq("x y z")))
       .toDF("sid", "shs")
     val kernel = df.select(col("sid"),
@@ -38,7 +36,6 @@ class MinHashBandsSpec extends AnyFunSuite {
 
   test("empty shingle arrays generate no bands; null stays null") {
     import spark.implicits._
-    MinHashBands.register(spark)
     val df = Seq((1L, Some(Seq.empty[String])), (2L, None),
       (3L, Some(Seq("s")))).toDF("sid", "shs")
     val out = df.select(col("sid"),
@@ -68,7 +65,6 @@ class MinHashBandsSpec extends AnyFunSuite {
 
   test("simhash64 counts duplicate tokens like the multiset formulation") {
     import spark.implicits._
-    graft.functions.SimHash64.register(spark)
     // "a a b": a's bits vote twice — dropping duplicates would flip any
     // bit where a and b disagree
     val out = Seq((1L, Seq("a", "a", "b")), (2L, Seq("a", "b")))
@@ -83,8 +79,6 @@ class MinHashBandsSpec extends AnyFunSuite {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
-    graft.functions.MinHashBands.register(spark)
-    graft.functions.SimHash64.register(spark)
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -124,7 +118,6 @@ class MinHashBandsSpec extends AnyFunSuite {
 
   test("invalid band geometry is rejected at analysis time") {
     import spark.implicits._
-    MinHashBands.register(spark)
     val df = Seq((1L, Seq("s"))).toDF("sid", "shs")
     val e = intercept[Exception] {
       df.select(call_function("minhash_bands", col("shs"), lit(8), lit(3))).collect()

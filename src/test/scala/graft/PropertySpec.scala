@@ -195,7 +195,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("distinct_count kernel equals the reference distinct size on random arrays") {
-    graft.functions.DistinctCount.register(spark)
     val arrGen = Gen.listOf(Gen.oneOf("a", "b", "ab", "ba", "", "xyz", "a"))
     forAll(arrGen, n = 25) { xs =>
       val got = Seq(Tuple1(xs)).toDF("arr")
@@ -371,7 +370,6 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     val seqGen = Gen.listOfN(5, Gen.oneOf("a", "b", "c", "dd", "e"))
       .map(_.mkString(" "))
-    graft.functions.EditDistTokens.register(spark)
     def d(x: String, y: String): Int =
       Seq((x, y)).toDF("a", "b")
         .selectExpr("edit_dist_tokens(a, b) AS d").head.getInt(0)

@@ -340,7 +340,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pq_encode: a null codebook/geometry literal fails the type check, not the analyzer") {
-    graft.functions.PqEncode.register(spark)
     val err = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT pq_encode(array(CAST(1.0 AS FLOAT)), " +
         "CAST(NULL AS ARRAY<BIGINT>), array(CAST(1.0 AS FLOAT)), 1, 1, 1, true)")

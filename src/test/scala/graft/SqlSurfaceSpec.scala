@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{FloatVecDot, HexHamming}
+import graft.functions.Kernels
 import graft.sources.Tables
 
 /** The raw-SQL user path: every table registered as a view, queries run
@@ -146,12 +146,54 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   test("custom native functions callable from SQL text") {
     registerAll()
-    FloatVecDot.register(spark)
-    HexHamming.register(spark)
     val dots = spark.sql(
       "SELECT vec_id, vec_dot(embedding, embedding) AS sq FROM embeddings LIMIT 5")
     assert(dots.collect().forall(_.getDouble(1) >= 0.0))
     val ham = spark.sql("SELECT hex_hamming('00', 'ff') AS h").head.getInt(0)
     assert(ham === 8)
+  }
+
+  test("every kernel in the table resolves from SQL text in a fresh recipe session") {
+    // one call per table entry, no register call anywhere: the names come
+    // from GraftExtensions alone, including the kernels only the
+    // operators used to register (mmr_select, lcs_tokens, ...)
+    val calls = Map(
+      "vec_dot" -> "vec_dot(array(1f, 2f), array(3f, 4f))",
+      "hex_hamming" -> "hex_hamming('00', 'ff')",
+      "jaro_winkler" -> "jaro_winkler('martha', 'marhta')",
+      "minhash_bands" -> "minhash_bands(array('a b c', 'b c d'), 8, 2)",
+      "simhash64" -> "simhash64(array('a', 'b'))",
+      "deflate_len" -> "deflate_len('aaaa')",
+      "distinct_count" -> "distinct_count(array('a', 'b', 'a'))",
+      "unicode_normalize" -> "unicode_normalize('x', 'NFC')",
+      "bpe_encode" -> "bpe_encode('tea bat', 't e\na b')",
+      "unigram_encode" -> "unigram_encode('ab', '\u2581ab\t-1000000')",
+      "wordpiece_encode" -> "wordpiece_encode('ab', 'ab')",
+      "pq_encode" -> ("pq_encode(array(CAST(1.0 AS FLOAT)), array(CAST(0 AS BIGINT)), " +
+        "array(CAST(1.0 AS FLOAT)), 1, 1, 1, true)"),
+      "chrf_matches" -> "chrf_matches('abc', 'abd')",
+      "bleu_matches" -> "bleu_matches('a b c', 'a b d')",
+      "char_gram_tf" -> "char_gram_tf('hello', 16, 1, 3)",
+      "token_bucket_tf" -> "token_bucket_tf(array('a', 'b'), 16)",
+      "token_tf_vec" -> "token_tf_vec(array('a', 'b'), 16)",
+      "map_margin" -> "map_margin(map(1L, 2L), map(1L, 3L))",
+      "cdc_cuts" -> "cdc_cuts(array('a', 'b', 'c', 'd'), 2, 2)",
+      "gae_fold" -> ("gae_fold(array(named_struct('st', 1L, 'r', 2L, 'v', 3L)), " +
+        "990000L, 950000L)"),
+      "mmr_select" -> ("mmr_select(array(named_struct('id', 1L, 'rel', 5L)), " +
+        "array(named_struct('a', 1L, 'b', 2L, 's', 3L)), 1, 5)"),
+      "lcs_tokens" -> "lcs_tokens('a b c', 'a c')",
+      "edit_dist_tokens" -> "edit_dist_tokens('a b', 'a c')")
+    assert(Kernels.all.size === 23)
+    assert(calls.keySet === Kernels.all.map(_.name).toSet)
+    val fresh = spark.newSession()
+    Kernels.all.foreach { k =>
+      val df = fresh.sql(s"SELECT ${calls(k.name)} AS r")
+      val built = df.queryExecution.analyzed.expressions.flatMap(_.collect {
+        case e if k.expressionClass.isInstance(e) => e
+      })
+      assert(built.nonEmpty, s"${k.name} did not build ${k.expressionClass.getSimpleName}")
+      assert(df.collect().length === 1, k.name)
+    }
   }
 }

@@ -70,7 +70,7 @@ class TextOpsSpec extends AnyFunSuite {
     import spark.implicits._
     def norm(s: String, form: String): String =
       Seq(s).toDF("t")
-        .select(TextAnalysis.normalizeUnicode(spark, col("t"), form).as("r"))
+        .select(TextAnalysis.normalizeUnicode(col("t"), form).as("r"))
         .head().getString(0)
     val decomposed = "e\u0301"        // e + combining acute
     val composed = "\u00e9"
