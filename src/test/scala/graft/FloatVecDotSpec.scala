@@ -10,7 +10,7 @@ import graft.sources.Tables
 class FloatVecDotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("operators build kernels as Columns: same rows without the SQL names, registry untouched") {
+  test("kernels as Columns: same rows without the SQL names, registry untouched") {
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val dir = "/root/testdata/sf0.001"
