@@ -481,7 +481,7 @@ object Behavior {
     * ride as id ARRAYS (text joined back exactly once at the end) —
     * the exchanged volume is ids × depth, never text × depth. The loop
     * exits as soon as no node can still make progress (the count probe
-    * is nearly free on the just-checkpointed frame), so a depth-3
+    * rides the job that materializes each round), so a depth-3
     * forest pays 2 rounds at any maxDepth — and the round ceiling
     * ⌈log₂(maxDepth−1)⌉+1 guarantees every node within `maxDepth`
     * levels of a root has settled, so the placed/unreachable verdict
@@ -537,11 +537,10 @@ object Behavior {
     // length below, exactly like nodes level-BFS never reached
     val roundCap = if (maxDepth == 1) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(maxDepth - 2L) + 1
-    // one driver scalar per round: no node still has a path to splice
-    val settled = (st: DataFrame) =>
-      st.filter(!col("__dead") && col("__jump").isNotNull).count() == 0L
+    // done once no node still has a path to splice
+    val settled = Iterate.noRow(!col("__dead") && col("__jump").isNotNull)
     val state =
-      if (settled(init)) init
+      if (Iterate.holds(init, settled)) init
       else Iterate.fixpoint(init, roundCap, Some(settled)) { (state, _) =>
         val done = state.filter(col("__dead") || col("__jump").isNull)
         val contracted = state

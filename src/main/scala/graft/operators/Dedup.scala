@@ -1497,7 +1497,7 @@ object Dedup {
     // shortcutting — label values are node ids, so L(L(v)) is one
     // labels-keyed self-join — which turns the min-label walk into
     // doubling: rounds drop from the component diameter to O(log
-    // diameter). Each round is a full join + checkpoint + count cycle,
+    // diameter). Each round is a full join + checkpoint + probe cycle,
     // and the ROUND COUNT is what an iterative job's fixed cost scales
     // with (guide §1.2) — a diameter-17 hash chain paid ~100 stage
     // jobs here before. The fixpoint is unchanged: shortcut values are
@@ -1516,8 +1516,8 @@ object Dedup {
     // already final — one extra confirming round (a no-op when
     // converged) distinguishes that from a genuinely unconverged graph
     // before we fail, hence maxIter + 1 rounds.
-    val settled = (next: DataFrame) => next.filter(col("improved")).count() == 0L
-    val cc = Iterate.fixpoint(init, maxIter + 1, Some(settled)) { (prev, round) =>
+    val cc = Iterate.fixpoint(init, maxIter + 1,
+        Some(Iterate.noRow(col("improved")))) { (prev, round) =>
       val labels = prev.select(col("node"), col("label"))
       val viaNbr = edges
         .join(labels.select(col("node").as("src"), col("label")), Seq("src"))

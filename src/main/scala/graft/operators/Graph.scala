@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * partial — a node's in-edges combine within each task before the
   * shuffle), and one keys-sized left join back to the node set. Nothing
   * is ever collected to the driver except the node COUNT and (under
-  * `tol`) one movement scalar per round; rounds run through
+  * `tol`) one movement aggregate per round; rounds run through
   * [[Iterate.fixpoint]], which truncates lineage via
   * [[Iterate.checkpoint]] — executor-local blocks on local[32], reliable
   * checkpoint files when the deployment has set a checkpoint dir (the
@@ -46,12 +46,8 @@ object Graph {
     * per-round join key before checkpointing it (see the comment at the
     * use site). Below it the extra setup exchange and the forced wide
     * partitioning cost more than they save on a graph whose rank
-    * vector AQE broadcasts anyway. Overridable for experiments via
-    * `spark.graft.graph.copartitionMinEdges`. */
-  private def copartitionMinEdges(df: DataFrame): Long =
-    df.sparkSession.conf
-      .getOption("spark.graft.graph.copartitionMinEdges")
-      .map(_.toLong).getOrElse(262144L)
+    * vector AQE broadcasts anyway. */
+  private val copartitionMinEdges = 262144L
 
   /** PageRank over directed `edges(src, dst)`. Parallel edges are
     * legal (they weight the link); self-loops are legal. Returns
@@ -64,8 +60,8 @@ object Graph {
     * (each round is a full pass over the edge relation — at 100 TB that
     * is the dominant cost and must be a conscious choice, not a
     * convergence loop that silently runs 80 rounds). `tol` adds the
-    * early exit a bounded round count can't express: after each round,
-    * ONE extra scalar aggregate computes the total absolute rank
+    * early exit a bounded round count can't express: each round ends in
+    * one aggregate ([[Iterate.fixpoint]]'s probe) of the total absolute rank
     * movement Σ|Δrank| (exact integer micro-units, so the test is
     * deterministic), and the loop stops once movement ≤ tol. The
     * round's output is kept, so the result is bit-identical to running
@@ -134,7 +130,7 @@ object Graph {
       .first().getLong(0)
     val annotated = e.join(deg, "src")
     val withDeg = Iterate.checkpoint(
-      if (edgeCount < copartitionMinEdges(edges)) annotated
+      if (edgeCount < copartitionMinEdges) annotated
       else annotated.repartition(
           edges.sparkSession.sessionState.conf.numShufflePartitions,
           col("src"))
@@ -174,14 +170,13 @@ object Graph {
 
     val init = nodes.select(col("node"), col("__seed"), col("__out"),
       when(col("__seed"), lit(1000000L)).otherwise(lit(0L)).as("rank_m"))
-    // exact-integer movement scalar over the just-checkpointed frame
-    // (new rank + carried previous rank — no join). Normalized by s so
-    // tol keeps meaning "total movement in OUTPUT-rank units (which sum
-    // to ~1)" under per-node micros.
-    val settled = tol.map { t => (r: DataFrame) =>
-      r.agg(coalesce(sum(abs(col("rank_m") - col("__prev"))), lit(0L)))
-        .first().getLong(0).toDouble / 1e6 / s <= t
-    }
+    // exact-integer movement over the new round's frame (new rank +
+    // carried previous rank — no join). Normalized by s so tol keeps
+    // meaning "total movement in OUTPUT-rank units (which sum to ~1)"
+    // under per-node micros.
+    val settled = tol.map(t =>
+      coalesce(sum(abs(col("rank_m") - col("__prev"))), lit(0L))
+        .cast("double") / lit(1e6) / lit(s) <= lit(t))
     val ranks = Iterate.fixpoint(init, iters, settled) { (ranks, _) =>
       // share per out-edge: long/long division is IEEE double in both
       // engines; floor(x + 0.5) quantizes to micros deterministically.
@@ -286,13 +281,8 @@ object Graph {
     * meaning as [[pageRank]]'s: the per-round movement scalar
     * Σ(|Δauth| + |Δhub|) is normalized by the node count, so one tol
     * value expresses the same per-node convergence bar on a 1k-node
-    * fixture and a 1B-node crawl graph. COMPATIBILITY NOTE: this
-    * per-node normalization landed in round 10 — before that, `tol`
-    * compared against the ABSOLUTE total movement, so a tol tuned to
-    * the old scale is now ~n× looser on an n-node graph and converges
-    * at a different round; divide pre-round-10 tolerances by the node
-    * count when migrating. Returns `(node, auth, hub)` rounded to
-    * 6 dp, maxima at 1.0. */
+    * fixture and a 1B-node crawl graph. Returns `(node, auth, hub)`
+    * rounded to 6 dp, maxima at 1.0. */
   def hits(edges: DataFrame, iters: Int,
       tol: Option[Double] = None): DataFrame = {
     require(iters >= 1 && iters <= 50, s"need 1 <= iters <= 50, got $iters")
@@ -306,18 +296,17 @@ object Graph {
     val init = nodes
       .withColumn("auth_m", lit(1000000L))
       .withColumn("hub_m", lit(1000000L))
-    // the pageRank tol discipline: one exact-integer movement scalar per
-    // round — Σ(|Δauth_m| + |Δhub_m|) over the just-checkpointed frame
-    // (previous scores carried along — no join), normalized by the NODE
-    // count so tol means "average per-node movement in score units" on
-    // any graph size, the same per-output-unit contract as pageRank's
-    // division by its seed count; output equals the fixed round count
-    // actually executed (GraphSpec)
-    val settled = tol.map { t => (sc: DataFrame) =>
-      sc.agg(coalesce(sum(abs(col("auth_m") - col("__pa")) +
-          abs(col("hub_m") - col("__ph"))), lit(0L)))
-        .first().getLong(0).toDouble / 1e6 / n <= t
-    }
+    // the pageRank tol discipline: one exact-integer movement per round
+    // — Σ(|Δauth_m| + |Δhub_m|) over the new round's frame (previous
+    // scores carried along — no join), normalized by the NODE count so
+    // tol means "average per-node movement in score units" on any graph
+    // size, the same per-output-unit contract as pageRank's division by
+    // its seed count; output equals the fixed round count actually
+    // executed (GraphSpec)
+    val settled = tol.map(t =>
+      coalesce(sum(abs(col("auth_m") - col("__pa")) +
+          abs(col("hub_m") - col("__ph"))), lit(0L))
+        .cast("double") / lit(1e6) / lit(n) <= lit(t))
     val scores = Iterate.fixpoint(init, iters, settled) { (scores, _) =>
       // the previous score frame is the per-round spine (same key set
       // as `nodes`, already materialized): authorities rescale onto it
@@ -330,7 +319,7 @@ object Graph {
       // broadcast build + the rescale join run as separate jobs, so
       // exchange reuse cannot dedupe them) — without these checkpoints
       // the edge contribution join ran 4x per round instead of 2x
-      // (guide §1.2); the checkpointed frames are nodes-sized
+      // (guide §1.2); nodes-sized, released with the round
       val aRaw = Iterate.checkpoint(
         e.join(scores.select(col("node"), col("hub_m")),
           col("node") === col("src"))
@@ -445,8 +434,8 @@ object Graph {
     * ceiling `iters` rounds yields bit-identical output — which is
     * exactly what lets a fixed-round oracle replay an early-exiting
     * engine (the LPA/tol contract, here with no tolerance knob at all).
-    * One scalar count per round reaches the driver; lineage truncates
-    * per round via [[Iterate.checkpoint]].
+    * One count per round (the [[Iterate.fixpoint]] probe) reaches the
+    * driver; lineage truncates per round via [[Iterate.checkpoint]].
     *
     * Returns `(node, degree)` for the nodes of the k-core, `degree`
     * being the WITHIN-CORE degree (≥ k by construction) WHEN the
@@ -500,19 +489,16 @@ object Graph {
     // bit-identical.
     val deg0 = Iterate.checkpoint(
       nbr.groupBy("node").agg(count(lit(1)).as("degree")))
-    // one driver scalar pair per round: the peel is done once a round
-    // removes nothing (stable core) or everything (empty core)
-    def settled(deg: DataFrame): Boolean = {
-      val r = deg.agg(count(when(col("degree") < lit(k.toLong), 1)),
-        count(lit(1))).first()
-      r.getLong(0) == 0L || r.getLong(0) == r.getLong(1)
-    }
+    // the peel is done once a round removes nothing (stable core) or
+    // everything (empty core)
+    val removing = count(when(col("degree") < lit(k.toLong), true))
+    val settled = removing === 0L || removing === count(lit(1))
     // the first removal round runs on the initial degrees; each
     // fixpoint round peels the previous round's removals, so `iters`
     // removal rounds are iters - 1 peels
     val peeled =
-      if (settled(deg0)) Iterate.Fixpoint(deg0, converged = true)
-      else Iterate.fixpoint(deg0, iters - 1, Some(settled _)) { (deg, _) =>
+      if (Iterate.holds(deg0, settled)) Iterate.Fixpoint(deg0, converged = true)
+      else Iterate.fixpoint(deg0, iters - 1, Some(settled)) { (deg, _) =>
         val removed = deg.filter(col("degree") < lit(k.toLong))
         val drops = nbr
           .join(removed.select(col("node").as("other")), Seq("other"))
@@ -546,7 +532,7 @@ object Graph {
     *
     * `iters` bounded for the same reason as [[pageRank]]: each round is
     * a full edge-relation pass. `tolChanged` is the convergence
-    * counterpart of pageRank's `tol`: after each round one scalar counts
+    * counterpart of pageRank's `tol`: each round ends in one count of
     * the nodes whose label CHANGED, and the loop stops once that count
     * ≤ tolChanged (0 = run to stability) — output identical to the
     * fixed round count actually executed (GraphSpec). Returns
@@ -558,9 +544,7 @@ object Graph {
     val e = Iterate.checkpoint(edges.select(col("src"), col("dst")))
     val nodes = Iterate.checkpoint(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    val settled = tolChanged.map { t => (next: DataFrame) =>
-      next.filter(col("__chg")).count() <= t
-    }
+    val settled = tolChanged.map(t => count(when(col("__chg"), true)) <= t)
     Iterate.fixpoint(nodes.withColumn("label", col("node")), iters,
         settled) { (prev, _) =>
       val labels = prev.select(col("node"), col("label"))
@@ -659,7 +643,7 @@ object Graph {
     * the whole distance relation) with the edge list on `src`, then
     * min-merges the relaxed distances into the accumulated relation —
     * one keyed equi-join + one keyed min-aggregation per round, nothing
-    * driver-side but the one frontier-size scalar, lineage truncated
+    * driver-side but the frontier-size probe, lineage truncated
     * via [[Iterate.checkpoint]]. Under unit weights a node's FIRST
     * reached level is already its minimal distance, so settled nodes
     * never move; an empty frontier is therefore OUTPUT-INVARIANT
@@ -681,19 +665,20 @@ object Graph {
       .select(col("node")).distinct()
       .withColumn("dist", lit(0L)).withColumn("__new", lit(true)))
     require(dist.count() > 0, "bfsDepth: empty seed set")
-    // one driver scalar per round: an empty frontier is convergence
-    val settled = (d: DataFrame) => d.filter(col("__new")).count() == 0L
-    Iterate.fixpoint(dist, iters, Some(settled)) { (dist, round) =>
+    // an empty frontier is convergence
+    Iterate.fixpoint(dist, iters, Some(Iterate.noRow(col("__new")))) { (dist, _) =>
       val relaxed = e.join(dist.filter(col("__new")), col("src") === col("node"))
-        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"))
-      // the new frontier: nodes whose min dist IS this round's level —
-      // exactly the first-reached set (settled nodes keep smaller
-      // dists). A flag on the merged frame needs no checkpoint of its
-      // own (guide §1.2: one materialization job less per round — the
-      // next round's filter re-reads local blocks, never lineage)
-      dist.select(col("node"), col("dist")).unionAll(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .withColumn("__new", col("dist") === lit(round.toLong))
+        .select(col("dst").as("node"), (col("dist") + lit(1L)).as("dist"),
+          lit(true).as("__r"))
+      // the new frontier: nodes all of whose merged rows come from this
+      // round's relaxation, i.e. first reached now (a settled node brings
+      // its own row). Read off the rows, not the round number, so every
+      // round runs one plan and reuses its generated code; as a flag on
+      // the merged frame it needs no checkpoint of its own (guide §1.2)
+      dist.select(col("node"), col("dist"), lit(false).as("__r"))
+        .unionAll(relaxed)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"),
+          bool_and(col("__r")).as("__new"))
     }.frame.select(col("node"), col("dist"))
   }
 
@@ -734,12 +719,10 @@ object Graph {
       .select(col("node")).distinct()
       .withColumn("dist", lit(0L)).withColumn("__pd", lit(null).cast("long")))
     require(dist.count() > 0, "shortestPaths: empty seed set")
-    def changed(d: DataFrame): DataFrame =
-      d.filter(col("__pd").isNull || col("dist") < col("__pd"))
-    // one driver scalar per round: a no-change round is convergence
-    val settled = (d: DataFrame) => changed(d).count() == 0L
-    Iterate.fixpoint(dist, iters, Some(settled)) { (dist, _) =>
-      val relaxed = e.join(changed(dist), col("src") === col("node"))
+    val changed = col("__pd").isNull || col("dist") < col("__pd")
+    // a no-change round is convergence
+    Iterate.fixpoint(dist, iters, Some(Iterate.noRow(changed))) { (dist, _) =>
+      val relaxed = e.join(dist.filter(changed), col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
           lit(null).cast("long").as("__pd"))
       // the previous distance rides the settled rows INTO the min-merge

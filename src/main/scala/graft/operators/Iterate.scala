@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{count, when}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** The one place graft truncates lineage and the one place it runs a
@@ -10,95 +13,110 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
   * [[fixpoint]]. `IterateSourceSpec` keeps direct `localCheckpoint` /
   * `checkpoint` calls out of the rest of the tree.
   *
-  * HOW to truncate is a deployment decision, not an algorithm decision:
-  *
-  *  - `localCheckpoint` materializes to executor-local block storage —
-  *    fast (no distributed-FS write) and the right default on local[32],
-  *    but it FORFEITS fault recovery: the checkpointed blocks live only
-  *    on the executors that computed them, so on a real cluster a single
-  *    executor loss mid-iteration kills the whole multi-hour job.
-  *  - reliable `checkpoint()` writes the rows to the SparkContext's
-  *    checkpoint directory (HDFS / object store on a cluster) — each
-  *    round pays a distributed write, and in exchange any executor can
-  *    rebuild any partition after a loss.
-  *
-  * [[checkpoint]] picks automatically: if the caller has set a checkpoint
-  * directory (`spark.sparkContext.setCheckpointDir(...)` — the explicit
-  * opt-in a 100 TB deployment makes anyway), frames checkpoint reliably;
-  * otherwise they fall back to `localCheckpoint`. Operators therefore
-  * need no extra parameter, and the same code is fault-tolerant on a
-  * cluster and fast in local mode (IterateSpec exercises both paths).
+  * HOW to truncate is a deployment decision, not an algorithm decision.
+  * `localCheckpoint` keeps the rows in executor-local blocks: fast, the
+  * right default on local[32], but an executor loss mid-iteration kills
+  * the job. Reliable `checkpoint()` writes them to the checkpoint
+  * directory (HDFS / object store), so any executor can rebuild any
+  * partition. [[checkpoint]] checkpoints reliably once the deployment has
+  * set a checkpoint dir (`sparkContext.setCheckpointDir`) and locally
+  * otherwise, so operators need no parameter for it (IterateSpec runs
+  * both paths).
   *
   * Who releases what:
   *
-  *  - [[fixpoint]] releases each round IT produced as soon as the next
-  *    round has materialized — the superseded frame's blocks are freed
-  *    through its `LogicalRDD`'s RDD ([[GraftSqlBridge.releaseCheckpoint]];
-  *    `Dataset.unpersist` does not reach a checkpoint's blocks). The last
-  *    round is the caller's result and stays.
-  *  - It never releases `init`: the starting frame belongs to the caller
-  *    (`Kmeans.trainFrom` receives a caller-owned centroid table) and may
-  *    be read again after the loop.
-  *  - Frames from plain [[checkpoint]] — loop-invariant inputs, per-round
-  *    side frames inside a step, one-off pins — are never released here;
-  *    they live until their RDD is garbage-collected by the context
-  *    cleaner. A fold whose OUTPUT reads every stage's checkpoint
-  *    (`Behavior.funnel`) must stay on plain [[checkpoint]]: releasing a
-  *    stage it still reads fails the final collect with
+  *  - [[fixpoint]] releases each round it produced once the next round
+  *    has materialized, through its `LogicalRDD`'s RDD
+  *    ([[GraftSqlBridge.releaseCheckpoint]]; `Dataset.unpersist` does not
+  *    reach a checkpoint's blocks). The last round is the caller's result.
+  *  - Side frames die with their round: every [[checkpoint]] a step takes
+  *    (hits' `aRaw`/`hRaw`, mixtureReweight's `raw`) is released with the
+  *    round that step read. A step must not checkpoint a frame it means
+  *    to keep for a later round.
+  *  - `init` is never released: it belongs to the caller
+  *    (`Kmeans.trainFrom` receives a caller-owned centroid table).
+  *  - [[checkpoint]]s outside a step (loop invariants, one-off pins) live
+  *    until the context cleaner collects their RDD. A fold whose output
+  *    reads every stage's checkpoint (`Behavior.funnel`) must not release
+  *    them, or its final collect fails with
   *    `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
-  *  - Reliable-mode files are not removed by a release. Spark deletes
-  *    them only under `spark.cleaner.referenceTracking.cleanCheckpoints=true`,
-  *    so deployments should set that flag (a superseded round is
-  *    unreferenced once released) or point the checkpoint dir at a
-  *    TTL'd/job-scoped path — the frames are the small rank/label
-  *    relations, never the corpus.
+  *  - A release does not delete reliable-mode files; Spark does so only
+  *    under `spark.cleaner.referenceTracking.cleanCheckpoints=true`, so
+  *    deployments set that flag or use a job-scoped checkpoint dir.
+  *
+  * Where the convergence probe runs: it is one boolean aggregate Column
+  * over the new round's frame. With local checkpoints the round is
+  * checkpointed lazily and the probe's aggregate is the job that
+  * materializes it (caches its blocks and cuts its lineage), so a probing
+  * round costs one job more than a fixed round, not two. With reliable
+  * checkpoints the round is checkpointed eagerly and the probe reads the
+  * written frame: a lazy reliable checkpoint would compute the round
+  * once for the probe and again to write its files.
   */
 object Iterate {
 
+  /** The side frames the running step has checkpointed (null outside a
+    * step); not inheritable, so pool threads a step starts keep none. */
+  private val roundSides = new ThreadLocal[ArrayBuffer[DataFrame]]
+
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.getCheckpointDir.isDefined
+
   /** Truncate `df`'s lineage: reliable `checkpoint(eager)` when the
     * SparkContext has a checkpoint dir set, `localCheckpoint(eager)`
-    * otherwise. */
+    * otherwise. Inside a [[fixpoint]] step the frame is a side frame of
+    * the round and is released with it. */
   def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val cp =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager)
-      else df.localCheckpoint(eager)
-    // the checkpoint SNAPSHOTS the child plan's estimated Statistics —
-    // in an iterative loop those estimates compound round over round
-    // (and square under a self-join) until the driver drowns in
-    // BigInteger arithmetic; clamp them far above every broadcast
-    // threshold (see GraftSqlBridge.capCheckpointStats)
-    GraftSqlBridge.capCheckpointStats(cp)
+    val cp = if (reliable(df)) df.checkpoint(eager) else df.localCheckpoint(eager)
+    // the checkpoint SNAPSHOTS the child plan's estimated Statistics,
+    // which compound round over round (see GraftSqlBridge.capCheckpointStats)
+    val out = GraftSqlBridge.capCheckpointStats(cp)
+    Option(roundSides.get).foreach(_ += out)
+    out
   }
+
+  /** Whether `probe`, one boolean aggregate over `frame`'s rows, holds
+    * (a null answer does not). [[fixpoint]] tests every round with it; a
+    * caller that tests `init` before looping uses it too. */
+  def holds(frame: DataFrame, probe: Column): Boolean = {
+    val r = frame.agg(probe).head()
+    !r.isNullAt(0) && r.getBoolean(0)
+  }
+
+  /** The probe "no row satisfies `cond`" (true on an empty frame; a row
+    * where `cond` is null does not count). */
+  def noRow(cond: Column): Column = count(when(cond, true)) === 0L
 
   /** The outcome of [[fixpoint]]: the last round's frame, and whether
     * the `converged` probe stopped the loop (always false without one). */
   final case class Fixpoint(frame: DataFrame, converged: Boolean)
 
-  /** Run `step` for rounds 1..`maxRounds`, each round eagerly
-    * [[checkpoint]]ed. After every round the optional `converged` probe
-    * reads the new frame; the loop stops the first time it answers
-    * true. The skeleton runs no job of its own: a fixed-round loop pays
-    * exactly its checkpoints, a probing loop one probe per round on top.
-    * `maxRounds` of 0 returns `init` untouched, unconverged.
+  /** Run `step` for rounds 1..`maxRounds`, each round [[checkpoint]]ed,
+    * and stop after the first round whose frame the optional `converged`
+    * probe [[holds]] for. The skeleton runs no job of its own: a fixed
+    * round pays its checkpoint, a probing round its probe (see the object
+    * doc). `maxRounds` of 0 returns `init` untouched, unconverged.
     *
-    * `step(prev, round)` gets the previous frame (`init` in round 1)
-    * and the 1-based round number. Each superseded round is released
-    * once its successor has materialized; `init` never is (see the
-    * object doc). A step may read `prev` freely — its output is
-    * checkpointed before `prev` goes — but must not keep a round's
-    * frame for use in a later round. */
+    * `step(prev, round)` gets the previous frame (`init` in round 1) and
+    * the 1-based round number. Once the new round has materialized, the
+    * superseded round and every frame the step checkpointed are
+    * released, so a step must not keep either for a later round. */
   def fixpoint(init: DataFrame, maxRounds: Int,
-      converged: Option[DataFrame => Boolean] = None)(
+      converged: Option[Column] = None)(
       step: (DataFrame, Int) => DataFrame): Fixpoint = {
     @annotation.tailrec
     def go(prev: DataFrame, round: Int): Fixpoint =
       if (round > maxRounds) Fixpoint(prev, converged = false)
       else {
-        val next = checkpoint(step(prev, round))
-        if (prev ne init) GraftSqlBridge.releaseCheckpoint(prev)
-        if (converged.exists(_(next))) Fixpoint(next, converged = true)
-        else go(next, round + 1)
+        val outer = roundSides.get
+        val sides = ArrayBuffer[DataFrame]()
+        roundSides.set(sides)
+        val built = try step(prev, round) finally roundSides.set(outer)
+        val next = checkpoint(built, eager = converged.isEmpty || reliable(built))
+        val done = converged.exists(holds(next, _))
+        (if (prev ne init) sides :+ prev else sides)
+          .foreach(GraftSqlBridge.releaseCheckpoint)
+        if (done) Fixpoint(next, converged = true) else go(next, round + 1)
       }
     go(init, 1)
   }

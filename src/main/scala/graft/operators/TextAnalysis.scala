@@ -2396,10 +2396,10 @@ object TextAnalysis {
         .join(nodes.select(col("__cid").as("__hi")), Seq("__hi"), "left_semi"))
     // one frame per round: the accepted candidates (`__acc`) and the
     // still-undecided ones; a round drops the candidates it rejects
-    val allDecided = (st: DataFrame) => st.filter(!col("__acc")).isEmpty
+    val allDecided = graft.operators.Iterate.noRow(!col("__acc"))
     val init = nodes.withColumn("__acc", lit(false))
     val decided =
-      if (allDecided(init)) init
+      if (graft.operators.Iterate.holds(init, allDecided)) init
       else {
         val loop = graft.operators.Iterate.fixpoint(init, maxRounds,
             Some(allDecided)) { (st, _) =>
